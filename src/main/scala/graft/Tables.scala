@@ -39,24 +39,19 @@ object Tables {
     * (ParquetUtils reads footers through an RDD even for one file) —
     * ~0.1 s of pure scheduler latency per table reference, paid by
     * every query on every call (a 7-view TPC-H query spent 7 of its 9
-    * jobs here). Memoize the inferred schema per parquet path and pass
-    * it explicitly on later loads: metadata reuse only (what a catalog
-    * table or Iceberg manifest provides for free — guide §6); the data
-    * is re-scanned from parquet on every query, and fresh reads keep
-    * fresh expression ids so self-joins are unaffected.
+    * jobs here). The inferred schema is a [[graft.Artifacts]] state
+    * value per parquet path, passed explicitly on every load: metadata
+    * reuse only (what a catalog table or Iceberg manifest provides for
+    * free — guide §6); the data is re-scanned from parquet on every
+    * query, and fresh reads keep fresh expression ids so self-joins
+    * are unaffected.
     */
-  private val schemaMemo =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val df = schemaMemo.get(path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val inferred = spark.read.parquet(path)
-        schemaMemo.putIfAbsent(path, inferred.schema)
-        inferred
+    val schema = graft.Artifacts.state(spark, "parquet_schema", sfDir, name) {
+      spark.read.parquet(path).schema
     }
+    val df = spark.read.schema(schema).parquet(path)
     expectedCols.get(name).foreach { want =>
       val missing = want.filterNot(df.columns.contains)
       if (missing.nonEmpty) throw new IllegalStateException(

@@ -106,25 +106,13 @@ object Bpe {
     * driver-small by the same argument as the DSIR model (cap-guarded
     * loudly; at 100 TB a natural-language vocabulary is millions of
     * words, far under the cap, while corpus SIZE is irrelevant here).
-    * Staleness contract = the codebook's: keys on the analyzed plan's
-    * md5 digest ([[graft.Scratch.planDigest]] — collision-resistant
-    * where the 32-bit semanticHash left a silent wrong-state class);
-    * in-session fixture rewrites must [[clearTrainedState]].
+    * A [[graft.Artifacts]] state value.
     */
-  private val trainCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType, Map[String, Long])]()
-
-  def clearTrainedState(): Unit = trainCache.clear()
-
   private def trainedState(docs: DataFrame, textCol: String, rounds: Int)
       : (Array[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.StructType, Map[String, Long]) = {
-    val key = Seq(
-      org.apache.spark.sql.GraftBridge.sessionUUID(docs.sparkSession),
-      graft.Scratch.planDigest(docs), textCol, rounds)
-      .mkString("|")
-    trainCache.computeIfAbsent(key, _ => {
+         org.apache.spark.sql.types.StructType, Map[String, Long]) =
+    graft.Artifacts.state(docs.sparkSession, "bpe_merges", docs, textCol,
+        rounds) {
       val (m, vocab) = train(docs, textCol, rounds)
       val mergeRows = m.collect()
       // cap BEFORE the collect: checking after would let a pathological
@@ -140,8 +128,7 @@ object Bpe {
         .collect()
       (mergeRows, m.schema,
         vocabRows.map(r => r.getString(0) -> r.getLong(1)).toMap)
-    })
-  }
+    }
 
   /** The learned merge table. Trains (and memoizes) on first call per
     * (session, corpus, rounds); the returned plan is a local relation

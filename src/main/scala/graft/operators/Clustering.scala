@@ -152,15 +152,15 @@ object Clustering {
     * ([[Similarity.ivfTrainedTopK]]). Factored out of [[lloydIterate]]
     * so index construction and assignment share one code path.
     *
-    * MEMOIZED per (session, input plan, params): an ANN index's coarse
-    * quantizer is built once and probed by every query, so callers
-    * that share a corpus (the recall ladder's ivf_train and ivfpq
-    * arms, repeated bench iterations) must not re-run the training
-    * jobs. The cache holds the COLLECTED k×dims centroid rows — a few
-    * KB of plain driver memory, rebuilt into a LocalRelation per call
-    * — never a persisted RDD, because the bench/profile harnesses
-    * unpersist stray RDDs between runs and would invalidate a cached
-    * checkpoint out from under the memo.
+    * A [[graft.Artifacts]] state value per (input plan, params): an
+    * ANN index's coarse quantizer is built once and probed by every
+    * query, so callers that share a corpus (the recall ladder's
+    * ivf_train and ivfpq arms, repeated bench iterations) must not
+    * re-run the training jobs. The value is the COLLECTED k×dims
+    * centroid rows — a few KB of plain driver memory, rebuilt into a
+    * LocalRelation per call — never a persisted RDD, because the
+    * bench/profile harnesses unpersist stray RDDs between runs and
+    * would invalidate a cached checkpoint out from under the registry.
     */
   def lloydCentroids(df: DataFrame, idCol: String, embCol: String,
       k: Int, iterations: Int, salt: String = "kmeans"): DataFrame = {
@@ -178,28 +178,12 @@ object Clustering {
     */
   private[graft] def lloydCentroidRows(df: DataFrame, idCol: String,
       embCol: String, k: Int, iterations: Int,
-      salt: String = "kmeans"): Array[(Long, Array[Long], Long)] = {
-    val key = Seq(
-      org.apache.spark.sql.GraftBridge.sessionUUID(df.sparkSession),
-      graft.Scratch.planDigest(df), idCol, embCol, k,
-      iterations, salt).mkString("|")
-    centCache.computeIfAbsent(key, _ =>
+      salt: String = "kmeans"): Array[(Long, Array[Long], Long)] =
+    graft.Artifacts.state(df.sparkSession, "centroids", df, idCol, embCol, k,
+        iterations, salt) {
       lloydCentroidRowsPrepped(prep(df, idCol, embCol), df, idCol, embCol,
-        k, iterations, salt))
-  }
-
-  private val centCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      Array[(Long, Array[Long], Long)]]()
-
-  /** STALENESS CONTRACT: the centroid memo keys on (session, analyzed
-    * plan md5 digest, dials) — rewriting the files behind an
-    * unchanged path mid-session leaves the hash unchanged and serves
-    * stale centroids. Harnesses that regenerate data in-session must
-    * call this (and [[Similarity.clearTrainedState]]) after the
-    * rewrite; see the memo rationale on [[lloydCentroids]].
-    */
-  def clearTrainedState(): Unit = centCache.clear()
+        k, iterations, salt)
+    }
 
   /** Exact integer squared L2 of EVERY (row, centroid) pair — the
     * un-argmin'd fan-out [[assign]] collapses. Diagnostics surface

@@ -187,12 +187,12 @@ object Dedup {
     *
     * The detection job runs EAGERLY (the same driver-side adaptivity
     * as [[BloomJoin]]'s build job and Spark's own runtime filters),
-    * and its result — the tiny oversized-bucket list — is CACHED
-    * per (canonical input plan, cap, sampleMod) for the life of the
-    * JVM: skew is a property of a corpus version, so one detection
-    * pass serves every dedup query and repeat over the same input
-    * (production would persist the verdict next to the band table; a
-    * long-lived session over mutating data can [[clearSkewCache]]).
+    * and its result — the tiny oversized-bucket list — is a
+    * [[graft.Artifacts]] state value per (input plan, bucket cols,
+    * cap, sampleMod): skew is a property of a corpus version, so one
+    * detection pass serves every dedup query and repeat over the same
+    * input (production would persist the verdict next to the band
+    * table).
     * When no oversized bucket exists — every natural corpus — the
     * returned plan is the UNGUARDED plan plus constant columns, so
     * `where(!_kept)` star-edge branches constant-fold to empty and
@@ -202,14 +202,9 @@ object Dedup {
   def bucketSkewGuard(rows: DataFrame, bucketCols: Seq[String],
       idCol: String, cap: Int, sampleMod: Int = 100): DataFrame = {
     require(cap >= 2, s"cap must be >= 2, got $cap")
-    // key on the canonicalized plan OBJECT: its equality covers what
-    // toString elides (e.g. LocalRelation prints only its schema — two
-    // in-memory tables with the same shape must not share a verdict)
-    val key = (rows.queryExecution.analyzed.canonicalized,
-      bucketCols.mkString(","), idCol, cap, sampleMod)
-    val cached = skewCache.synchronized(Option(skewCache.get(key)))
-    val overRows = cached.getOrElse {
-      val detected = rows
+    val overRows = graft.Artifacts.state(rows.sparkSession, "skew_buckets",
+        rows, bucketCols, idCol, cap, sampleMod) {
+      rows
         .where(pmod(Sketches.hash60(col(idCol), "skewdetect"),
           lit(sampleMod.toLong)) === 0)
         .groupBy(bucketCols.map(col): _*)
@@ -217,8 +212,6 @@ object Dedup {
           min(col(idCol)).as("_anchor"))
         .where(col("_bsize") > cap)
         .collect().toSeq
-      skewCache.synchronized(skewCache.put(key, detected))
-      detected
     }
     if (overRows.isEmpty) {
       rows
@@ -242,31 +235,6 @@ object Dedup {
             pmod(Sketches.hash60(col(idCol), "skew"), col("_bsize")) < cap)
     }
   }
-
-  /** Detection results from [[bucketSkewGuard]], keyed by canonical
-    * input plan — see its doc for the caching contract.
-    */
-  private type SkewKey = (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    String, String, Int, Int)
-
-  /** Bounded LRU (access-order, evict-eldest) — the canonicalized-plan
-    * keys can pin LocalRelation input data, so cap the cache, but keep
-    * hot inputs resident in a long-lived session instead of wholesale
-    * clearing. All access under `synchronized` (LinkedHashMap mutates
-    * internally even on get in access order).
-    */
-  private val skewCache =
-    new java.util.LinkedHashMap[SkewKey, Seq[org.apache.spark.sql.Row]](
-        64, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SkewKey, Seq[org.apache.spark.sql.Row]]): Boolean =
-        size() > 64
-    }
-
-  /** Drop all cached skew-detection verdicts (for sessions whose
-    * underlying data mutates between queries).
-    */
-  def clearSkewCache(): Unit = skewCache.synchronized(skewCache.clear())
 
   /** Cast-to-long graph ids must BE integral: see the call sites. */
   private def requireIntegralIds(
@@ -863,11 +831,8 @@ object Dedup {
     * (and any well-behaved multi-query driver) unpersists blocks
     * between queries, and the parquet round-trip additionally gives
     * later queries a column-pruned scan of exactly the columns they
-    * need. Memo keys on (session UUID, canonicalized-plan md5 digest,
-    * idCol, textCol, k) — the [[Similarity]] codebook's staleness
-    * contract applies verbatim: rewriting the files behind the same
-    * path mid-session serves stale index state; call
-    * [[clearShingleIndex]] after in-session fixture rewrites.
+    * need. A [[graft.Artifacts]] layout per (corpus plan, idCol,
+    * textCol, k).
     */
   final case class ShingleIndex(ranked: DataFrame, arr: DataFrame)
 
@@ -879,27 +844,13 @@ object Dedup {
     */
   private val ShIdxFloor = 32
 
-  private val shIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Number of distinct indexes built this session (spec hook: calling
-    * an operator twice on the same corpus must not grow this).
-    */
-  def shingleIndexCount: Int = shIdxCache.size()
-
   def shingleIndex(df: DataFrame, idCol: String, textCol: String,
       k: Int): ShingleIndex = {
     val spark = df.sparkSession
-    // planDigest, not the 32-bit semanticHash: a key collision between
-    // two live corpora would silently serve the wrong index (the md5
-    // TABLE name only removed the overwrite class) — see Scratch
-    val key = Seq(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      graft.Scratch.planDigest(df), idCol, textCol, k)
-      .mkString("|")
-    val (rankedTable, dirPath) = shIdxCache.computeIfAbsent(key, _ => {
+    val idx = graft.Artifacts.table(spark, "shingle_index", df, idCol,
+        textCol, k) { layout =>
       import org.apache.spark.sql.expressions.Window
-      val dir = graft.Scratch.tempDir("graft-shidx-")
+      val dir = layout.dir
       // WordShingles emits DISTINCT shingles, so (doc, u) is unique (up
       // to the 2⁻⁴⁰ md5-prefix collision caveat the verify inherits);
       // one md5 per shingle, longs everywhere downstream. The exploded
@@ -909,13 +860,6 @@ object Dedup {
         .select(col(idCol).as("doc"), explode(shingles(col(textCol), k)).as("sh"))
         .select(col("doc"), shingleU(col("sh")).as("u"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // content-addressed name: a key.hashCode-derived name leaves a
-      // 2⁻³² class of silent cross-corpus table overwrites (two live
-      // cache keys colliding → the second build replaces the first's
-      // files while its cache entry still points there); the full md5
-      // of the cache key removes the class
-      val tableName = "graft_shidx_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(key)
       // try/finally: a failed artifact write (disk full, task failure)
       // must not leak the corpus-sized persisted table for the session
       // — the kcore hardening discipline
@@ -960,25 +904,11 @@ object Dedup {
         .write.mode("overwrite").format("parquet")
         .option("path", s"$dir/ranked")
         .bucketBy(shIdxBuckets, "u").sortBy("u")
-        .saveAsTable(tableName)
+        .saveAsTable(layout.name("shidx"))
       } finally sh.unpersist()
-      (tableName, dir)
-    })
-    ShingleIndex(
-      spark.table(rankedTable), spark.read.parquet(s"$dirPath/arr"))
-  }
-
-  /** Staleness escape hatch — see the [[ShingleIndex]] contract. Drops
-    * the catalog tables and reclaims the artifact dirs (not just the
-    * memo entries — clearing only the map orphaned corpus-sized parquet
-    * for the life of the machine).
-    */
-  def clearShingleIndex(spark: org.apache.spark.sql.SparkSession): Unit = {
-    shIdxCache.forEach { (_, v) =>
-      spark.sql(s"DROP TABLE IF EXISTS ${v._1}")
-      graft.Scratch.delete(v._2)
     }
-    shIdxCache.clear()
+    ShingleIndex(
+      spark.table(idx.name("shidx")), spark.read.parquet(s"${idx.dir}/arr"))
   }
 
   /** EXACT Jaccard-threshold self-join via prefix filtering — the

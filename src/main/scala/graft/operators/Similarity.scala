@@ -672,20 +672,15 @@ object Similarity {
   private def pqCodebook(prep: DataFrame, idCol: String, subspaces: Int,
       dsub: Int, codebookSize: Int, trainRounds: Int = 1): Array[Array[Long]] = {
     require(trainRounds >= 1, s"trainRounds must be >= 1, got $trainRounds")
-    // memoized like Clustering.lloydCentroids: the codebook is index
-    // state, trained once per (session, corpus plan, dials) and reused
-    // by every caller (pq + ivfpq share one training here)
-    val key = Seq(
-      org.apache.spark.sql.GraftBridge.sessionUUID(prep.sparkSession),
-      graft.Scratch.planDigest(prep), idCol, subspaces, dsub,
-      codebookSize, trainRounds).mkString("|")
-    cbCache.computeIfAbsent(key, _ =>
+    // a graft.Artifacts state value like Clustering.lloydCentroids: the
+    // codebook is index state, trained once per (corpus plan, dials)
+    // and reused by every caller (pq + ivfpq share one training here)
+    graft.Artifacts.state(prep.sparkSession, "pq_codebook", prep, idCol,
+        subspaces, dsub, codebookSize, trainRounds) {
       pqCodebookUncached(prep, idCol, subspaces, dsub, codebookSize,
-        trainRounds))
+        trainRounds)
+    }
   }
-
-  private val cbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Long]]]()
 
   /** Memoized md5-draw coarse centroids for the UNTRAINED IVF paths —
     * (cent_id, qcent, n2cent, cidx), cidx dense in cent_id order. The
@@ -695,17 +690,14 @@ object Similarity {
     * as a LocalRelation per call — without the memo every ivf/ivf_mp
     * execution re-ran the corpus-wide TakeOrdered + the cidx window as
     * its own plan subtree (round 18: 2 extra stages per ladder arm at
-    * bench SF, pure scheduler latency). Same staleness contract as the
-    * codebook memo ([[clearTrainedState]]).
+    * bench SF, pure scheduler latency).
     */
   private def md5CentroidRows(prep: DataFrame, idCol: String,
       nCentroids: Int): Array[(Long, Array[Long], Long)] = {
-    val key = Seq(
-      org.apache.spark.sql.GraftBridge.sessionUUID(prep.sparkSession),
-      graft.Scratch.planDigest(prep), idCol, nCentroids).mkString("|")
     // sorted by cent_id — position IS the dense cidx label the old
     // row_number window assigned
-    mdCentCache.computeIfAbsent(key, _ =>
+    graft.Artifacts.state(prep.sparkSession, "md5_centroids", prep, idCol,
+        nCentroids) {
       prep
         .orderBy(md5(concat(lit("centroid:"), col(idCol).cast("string"))),
           col(idCol))
@@ -713,22 +705,9 @@ object Similarity {
         .select(col(idCol).cast("long").as("cent_id"), col("q"), col("n2"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-        .sortBy(_._1))
+        .sortBy(_._1)
+    }
   }
-
-  private val mdCentCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      Array[(Long, Array[Long], Long)]]()
-
-  /** STALENESS CONTRACT: the codebook memo keys on (session, analyzed
-    * plan md5 digest, dials) — if the FILES behind the same path are
-    * rewritten mid-session the hash is unchanged and stale index state
-    * would be served. Harnesses that regenerate data in-session must
-    * call this (and [[Clustering.clearTrainedState]]) after the
-    * rewrite; normal sessions never need it (index state is exactly as
-    * stale as any persisted ANN index over a mutated corpus).
-    */
-  def clearTrainedState(): Unit = { cbCache.clear(); mdCentCache.clear() }
 
   /** [[ivfPqTopK]] against a PERSISTED index — the full lifecycle the
     * composed query path skips: the (id, cell, codes) table writes

@@ -356,8 +356,6 @@ object TextAnalysis {
     * is an index you maintain, not a pass you re-run per query. The
     * token bucketing makes every token-keyed aggregate downstream
     * (document frequency, query-term selection) exchange-free.
-    * Memo/staleness contract identical to the shingle index
-    * ([[clearTokenIndex]] after in-session fixture rewrites).
     */
   def tokenFrequencyIndex(df: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
@@ -366,13 +364,8 @@ object TextAnalysis {
     // pre-project (hybrid's select) and callers that pass the raw
     // table converge on one artifact
     val proj = df.select(col(idCol), col(textCol))
-    val key = Seq(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      graft.Scratch.planDigest(proj), idCol, textCol).mkString("|")
-    val (tableName, _) = tokIdxCache.computeIfAbsent(key, _ => {
-      val dir = graft.Scratch.tempDir("graft-tokidx-")
-      val name = "graft_tokidx_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(key)
+    val idx = graft.Artifacts.table(spark, "token_index", proj, idCol,
+        textCol) { layout =>
       val buckets = Buckets.artifact(df, floor = 32)
       proj
         .select(col(idCol).as("doc"),
@@ -382,31 +375,11 @@ object TextAnalysis {
         .agg(count(lit(1)).as("tf"))
         .repartition(buckets, col("token"))
         .write.mode("overwrite").format("parquet")
-        .option("path", s"$dir/tf")
+        .option("path", s"${layout.dir}/tf")
         .bucketBy(buckets, "token").sortBy("token")
-        .saveAsTable(name)
-      (name, dir)
-    })
-    spark.table(tableName)
-  }
-
-  private val tokIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Number of distinct token indexes built this session (spec hook —
-    * the shingleIndexCount contract).
-    */
-  def tokenIndexCount: Int = tokIdxCache.size()
-
-  /** Staleness escape hatch — the [[graft.operators.Dedup
-    * .clearShingleIndex]] contract verbatim.
-    */
-  def clearTokenIndex(spark: org.apache.spark.sql.SparkSession): Unit = {
-    tokIdxCache.forEach { (_, v) =>
-      spark.sql(s"DROP TABLE IF EXISTS ${v._1}")
-      graft.Scratch.delete(v._2)
+        .saveAsTable(layout.name("tokidx"))
     }
-    tokIdxCache.clear()
+    spark.table(idx.name("tokidx"))
   }
 
   /** Top-k TF-IDF terms per document: tf·ln(N/df), rounded to 6 dp

@@ -302,22 +302,12 @@ object AnalyticsQueries {
     * catalog-sized support table, and the only per-query corpus-sized
     * exchange left is the pair count itself. At 100 TB a basket index
     * over the order history is a maintained table, exactly like the
-    * co-purchase edge list.
+    * co-purchase edge list. A [[graft.Artifacts]] layout.
     */
-  private val basketMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   private def basketIndex(
       spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val key =
-      s"${org.apache.spark.sql.GraftBridge.sessionUUID(spark)}|$sfDir"
-    val (tableName, dir) = basketMemo.getOrElseUpdate(key, {
-      val dir = graft.Scratch.tempDir("graft-basket-")
-      // md5 of the full memo key — the shingle index's content-
-      // addressed naming (a hashCode-derived name leaves a silent
-      // cross-session overwrite class)
-      val table = "graft_basket_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(key)
+    val idx = graft.Artifacts.table(spark, "basket_index", sfDir) { layout =>
+      val table = layout.name("basket")
       val li = Tables.lineitem(spark, sfDir)
       val bi = li
         .select(col("l_orderkey").as("_b"), col("l_partkey").as("_i"))
@@ -330,29 +320,16 @@ object AnalyticsQueries {
       val buckets = graft.operators.Buckets.artifact(li)
       bi.repartition(buckets, col("_b"))
         .write.mode("overwrite").format("parquet")
-        .option("path", s"$dir/bi")
+        .option("path", s"${layout.dir}/bi")
         .bucketBy(buckets, "_b")
         .saveAsTable(table)
       // support counts derive FROM the artifact: one scan, one
       // catalog-sized result
       spark.table(table).groupBy(col("_i")).agg(count(lit(1)).as("_s"))
-        .write.mode("overwrite").parquet(s"$dir/support")
-      (table, dir)
-    })
-    (spark.table(tableName), spark.read.parquet(s"$dir/support"))
-  }
-
-  /** Staleness/disk escape hatch — the clearEdgeState contract. */
-  def clearBasketState(spark: SparkSession): Unit = {
-    basketMemo.values.foreach { case (table, dir) =>
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      graft.Scratch.delete(dir)
+        .write.mode("overwrite").parquet(s"${layout.dir}/support")
     }
-    basketMemo.clear()
+    (spark.table(idx.name("basket")), spark.read.parquet(s"${idx.dir}/support"))
   }
-
-  /** Number of distinct basket indexes built this session (spec hook). */
-  def basketIndexCount: Int = basketMemo.size
 
   /** Market-basket frequent part pairs over order baskets: items
     * pruned below support 8 BEFORE pair generation (A-priori), pairs

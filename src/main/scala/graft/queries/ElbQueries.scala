@@ -27,10 +27,6 @@ object ElbQueries {
       "http_method", "full_url", "http_version", "protocol", "hostname",
       "port", "path", "query_params", "request_creation_time", "log_source_file")
 
-  // staged gzip for the DSv2-source twin, one write per (session, sfDir)
-  private val dsv2Stage =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** [[elbParse]] ingested through the custom DataSource V2 reader
     * ([[graft.sources.ElbLogSourceV2]]) instead of the synthesized
     * in-memory lines: the same parse must fall out of real gzip files
@@ -39,21 +35,19 @@ object ElbQueries {
     * column is excluded (it carries the temp staging path).
     */
   def elbDsv2Parse(spark: SparkSession, sfDir: String): DataFrame = {
-    val work = dsv2Stage.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionUUID(spark)}:$sfDir", {
-        val dir = graft.Scratch.tempDir("graft-dsv2q")
-        // One gzip object per core: gzip is non-splittable (1
-        // partition/file — SCALE.md's ingest note), so the staged file
-        // count IS the read parallelism. 4 files serialized the sf10
-        // parse onto 4 of 32 cores (~82 s for a ~10 s parse); derived
-        // from the host's parallelism, not a literal, so the memoized
-        // staging dir matches whatever box runs it (at real scale the
-        // analogous dial is objects ≈ cluster cores at ~1 GB each).
-        ElbSynth.lines(Tables.events(spark, sfDir)).select("value")
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.option("compression", "gzip").text(s"$dir/logs")
-        dir
-      })
+    // staged gzip, one write per (session, sfDir)
+    val work = graft.Artifacts.table(spark, "dsv2_stage", sfDir) { layout =>
+      // One gzip object per core: gzip is non-splittable (1
+      // partition/file — SCALE.md's ingest note), so the staged file
+      // count IS the read parallelism. 4 files serialized the sf10
+      // parse onto 4 of 32 cores (~82 s for a ~10 s parse); derived
+      // from the host's parallelism, not a literal, so the staging
+      // dir matches whatever box runs it (at real scale the
+      // analogous dial is objects ≈ cluster cores at ~1 GB each).
+      ElbSynth.lines(Tables.events(spark, sfDir)).select("value")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .write.option("compression", "gzip").text(s"${layout.dir}/logs")
+    }.dir
     val raw = spark.read.format("graft.sources.ElbLogSourceV2")
       .load(s"$work/logs/*.gz")
     ElbParser.parse(raw).select(

@@ -53,39 +53,13 @@ object GraphQueries {
     * ranks/frontier table. Storage doubles (both directions on disk);
     * that's the maintained-table trade at any scale: pay layout once,
     * join forever for free. Bucket count via the [[graft.operators
-    * .Buckets]] dial (floor 32 — identical layout at test SF).
+    * .Buckets]] dial (floor 32 — identical layout at test SF). A
+    * [[graft.Artifacts]] layout.
     */
-  private val edgeMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  /** Staleness escape hatch — the [[graft.operators.Dedup.ShingleIndex]]
-    * contract verbatim: rewriting orders/lineitem behind the same sf
-    * dir mid-session would serve stale edges; harnesses that do that
-    * must clear. Also reclaims the artifact dirs (clearing only the
-    * memo would orphan them for the life of the machine).
-    */
-  def clearEdgeState(spark: SparkSession): Unit = {
-    edgeMemo.values.foreach { case (table, dir) =>
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      graft.Scratch.delete(dir)
-    }
-    edgeMemo.clear()
-    coPurchaseMemo.values.foreach(graft.Scratch.delete)
-    coPurchaseMemo.clear()
-  }
-
   private def edges(spark: SparkSession, sfDir: String): DataFrame = {
-    val key =
-      s"${org.apache.spark.sql.GraftBridge.sessionUUID(spark)}|$sfDir"
-    val (table, _) = edgeMemo.getOrElseUpdate(key, {
-      val dir = graft.Scratch.tempDir("graft-edges-")
+    val edgeLayout = graft.Artifacts.table(spark, "trade_edges", sfDir) { layout =>
       val o = Tables.orders(spark, sfDir)
       val l = Tables.lineitem(spark, sfDir)
-      // content-addressed name (the shingle-index discipline: a
-      // hashCode-derived name leaves a silent cross-corpus overwrite
-      // class; the full md5 of the cache key removes it)
-      val tableName = "graft_edges_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(key)
       val half = o.join(l, o("o_orderkey") === l("l_orderkey"))
         .select(
           col("o_custkey").as("src"),
@@ -102,12 +76,11 @@ object GraphQueries {
       half.union(half.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(buckets, col("src"))
         .write.mode("overwrite").format("parquet")
-        .option("path", s"$dir/edges")
+        .option("path", s"${layout.dir}/edges")
         .bucketBy(buckets, "src").sortBy("src")
-        .saveAsTable(tableName)
-      (tableName, dir)
-    })
-    spark.table(table)
+        .saveAsTable(layout.name("edges"))
+    }
+    spark.table(edgeLayout.name("edges"))
   }
 
   /** The CO-PURCHASE edge list (distinct canonical u < v pairs of the
@@ -119,17 +92,12 @@ object GraphQueries {
     * its own algorithm started. The artifact stores the edges already
     * canonical+distinct, so the operators skip their canonicalize
     * exchange too (`assumeCanonical`). At 100 TB a co-purchase graph
-    * is a maintained table, not a join you re-run per analysis.
+    * is a maintained table, not a join you re-run per analysis. A
+    * [[graft.Artifacts]] layout.
     */
-  private val coPurchaseMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[queries] def coPurchaseEdges(
       spark: SparkSession, sfDir: String): DataFrame = {
-    val key =
-      s"${org.apache.spark.sql.GraftBridge.sessionUUID(spark)}|$sfDir"
-    val path = coPurchaseMemo.getOrElseUpdate(key, {
-      val dir = graft.Scratch.tempDir("graft-copurchase-")
+    val edgeLayout = graft.Artifacts.table(spark, "copurchase_edges", sfDir) { layout =>
       val o = Tables.orders(spark, sfDir)
       val l = Tables.lineitem(spark, sfDir)
       // collect_set folds the distinct into the per-part aggregate (one
@@ -145,21 +113,10 @@ object GraphQueries {
         .select(col("col").as("u"),
           explode(slice(col("cs"), col("pos") + 2, size(col("cs")))).as("v"))
         .distinct()
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-    spark.read.parquet(path)
+        .write.mode("overwrite").parquet(s"${layout.dir}/edges")
+    }
+    spark.read.parquet(s"${edgeLayout.dir}/edges")
   }
-
-  /** Number of distinct co-purchase artifacts built this session (spec
-    * hook: two consumers over one sf dir must not grow this past 1).
-    */
-  def coPurchaseArtifactCount: Int = coPurchaseMemo.size
-
-  /** Number of distinct trade-edge artifacts built this session (spec
-    * hook — the [[coPurchaseArtifactCount]] contract for [[edges]]).
-    */
-  def edgeArtifactCount: Int = edgeMemo.size
 
   private def renderNode(node: org.apache.spark.sql.Column) =
     concat(when(node < SuppBit, lit("c")).otherwise(lit("s")),

@@ -128,55 +128,27 @@ object JoinQueries {
     * broadcast disabled). This is the 100 TB fact-to-fact join shape:
     * shuffle at ingest, join forever for free.
     *
-    * Round 17: the bucketed tables are SESSION ARTIFACTS (one write
-    * per (session, sf dir), the trade-edge memo pattern) — the bench
-    * used to re-ingest both sides on every run, so the measured cost
-    * was exactly the ingest the operator exists to amortize; warm runs
-    * now price the join alone, which is the claim. External tables in
-    * Scratch dirs, so the data dies with the JVM and the content-
-    * addressed names can't cross-corpus collide.
+    * Round 17: the bucketed tables are a [[graft.Artifacts]] layout
+    * (one write per (session, sf dir)) — the bench used to re-ingest
+    * both sides on every run, so the measured cost was exactly the
+    * ingest the operator exists to amortize; warm runs now price the
+    * join alone, which is the claim.
     */
-  private val bucketedMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  /** Staleness/disk escape hatch — the clearEdgeState contract. */
-  def clearBucketedState(spark: SparkSession): Unit = {
-    bucketedMemo.values.foreach { case (o, c) =>
-      spark.sql(s"DROP TABLE IF EXISTS $o")
-      spark.sql(s"DROP TABLE IF EXISTS $c")
-    }
-    bucketedMemo.clear()
-  }
-
   def bucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val key =
-      s"${org.apache.spark.sql.GraftBridge.sessionUUID(spark)}|$sfDir"
-    val (tOrders, tCust) = bucketedMemo.getOrElseUpdate(key, {
-      val suffix = org.apache.commons.codec.digest.DigestUtils.md5Hex(key)
-      val dir = graft.Scratch.tempDir("graft-bjoin-")
-      val to = s"graft_b_orders_$suffix"
-      val tc = s"graft_b_customer_$suffix"
-      def write(df: DataFrame, table: String, path: String): Unit = {
-        spark.sql(s"DROP TABLE IF EXISTS $table")
+    val tables = graft.Artifacts.table(spark, "bucketed_join", sfDir) { layout =>
+      def write(df: DataFrame, part: String): Unit =
         df.repartition(8, col("o_custkey"))
           .write.mode("overwrite").format("parquet")
-          .option("path", path)
+          .option("path", s"${layout.dir}/$part")
           .bucketBy(8, "o_custkey").sortBy("o_custkey")
-          .saveAsTable(table)
-      }
-      write(Tables.orders(spark, sfDir), to, s"$dir/orders")
+          .saveAsTable(layout.name(s"b_$part"))
+      write(Tables.orders(spark, sfDir), "orders")
       write(Tables.customer(spark, sfDir)
-        .withColumnRenamed("c_custkey", "o_custkey"), tc, s"$dir/customer")
-      (to, tc)
-    })
-    spark.table(tOrders).join(spark.table(tCust), "o_custkey")
+        .withColumnRenamed("c_custkey", "o_custkey"), "customer")
+    }
+    spark.table(tables.name("b_orders")).join(spark.table(tables.name("b_customer")), "o_custkey")
       .select("o_orderkey", "o_custkey", "o_totalprice", "c_name", "c_mktsegment")
   }
-
-  /** Number of distinct bucketed-join table pairs built this session
-    * (spec hook — the artifact-reuse contract).
-    */
-  def bucketedArtifactCount: Int = bucketedMemo.size
 
   /** Deterministic skew-salted join — result-identical to the plain
     * join (PartitioningSpec proves set equality; this query hash-proves

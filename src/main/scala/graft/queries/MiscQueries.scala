@@ -250,7 +250,7 @@ object MiscQueries {
     */
   def streamingGeoCache(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dir = graft.Scratch.tempDir("graft-stream-cache")
+    val dir = graft.Artifacts.tempDir("graft-stream-cache")
     val cachePath = s"$dir/geolocation_cache.parquet"
     val ips = StreamingPipeline.readEvents(spark, sfDir).select(
       concat(lit("10."), col("user_id") % 200, lit("."), col("event_id") % 250,
@@ -408,9 +408,6 @@ object MiscQueries {
     * identical bytes. Any loss — encoding, escaping, column type — is
     * a hash mismatch at the oracle, which reads the original table.
     */
-  private val fmtDirMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def formatRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("n_chars"))
@@ -423,9 +420,7 @@ object MiscQueries {
     // reuse is the elb_pipeline run-dir discipline (a frame from a
     // PREVIOUS invocation must be consumed before the next one runs —
     // every harness here does).
-    val base = fmtDirMemo.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionUUID(spark)}|$sfDir",
-      graft.Scratch.tempDir("graft-fmt-"))
+    val base = graft.Artifacts.table(spark, "format_roundtrip", sfDir)(_ => ()).dir
     graft.sources.Sinks.orc(docs, s"$base/orc")
     graft.sources.Sinks.jsonl(docs, s"$base/jsonl")
     graft.sources.Sinks.avro(docs, s"$base/avro")

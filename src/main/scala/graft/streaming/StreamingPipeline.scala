@@ -516,12 +516,13 @@ object StreamingPipeline {
     * production shape. Append-mode only (the file sink's contract).
     *
     * Fresh scratch dir per run (file sinks can't overwrite their own
-    * checkpoint/_spark_metadata); dirs die with the JVM via Scratch.
+    * checkpoint/_spark_metadata); dirs die with the JVM via
+    * [[graft.Artifacts.tempDir]].
     */
   def runToParquet(df: DataFrame, name: String)
       : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
     enableNioCheckpoints(df.sparkSession)
-    val dir = graft.Scratch.tempDir(s"graft-stream-$name-")
+    val dir = graft.Artifacts.tempDir(s"graft-stream-$name-")
     val q = df.writeStream.format("parquet")
       .option("path", s"$dir/out")
       .option("checkpointLocation", s"$dir/ckpt")

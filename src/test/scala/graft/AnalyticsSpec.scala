@@ -281,13 +281,13 @@ class AnalyticsSpec extends SparkSpec {
         .select($"l_orderkey".as("basket"), $"l_partkey".as("item")),
       "basket", "item",
       minItemSupport = 8L, minPairSupport = 2L, maxBasketItems = 16))
-    val before = graft.queries.AnalyticsQueries.basketIndexCount
+    val before = Artifacts.count("basket_index")
     val viaIndex = rows(graft.queries.AnalyticsQueries.marketBasket(spark, sf))
     assert(viaIndex === direct)
-    val built = graft.queries.AnalyticsQueries.basketIndexCount
+    val built = Artifacts.count("basket_index")
     assert(built <= before + 1)
     graft.queries.AnalyticsQueries.marketBasket(spark, sf).count()
-    assert(graft.queries.AnalyticsQueries.basketIndexCount == built,
+    assert(Artifacts.count("basket_index") == built,
       "second run must reuse the artifact, not rebuild")
   }
 

@@ -146,7 +146,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngram Jaccard: identical-doc corpus stays bounded and unskewed corpora are unchanged") {
-    Dedup.clearSkewCache()
+    Artifacts.clear(spark)
     // adversarial: every doc identical — the unguarded formulation
     // would emit (and BROADCAST) n²/2 candidate pairs
     val n = 5000
@@ -307,13 +307,13 @@ class DedupSpec extends SparkSpec {
       (2L, "a b c d e f g h i j k m"),
       (3L, "zz yy xx ww vv uu tt ss rr qq pp oo")
     ).toDF("doc_id", "text")
-    val before = Dedup.shingleIndexCount
+    val before = Artifacts.count("shingle_index")
     Dedup.prefixFilterJoin(docs, "text", "doc_id").collect()
-    assert(Dedup.shingleIndexCount == before + 1, "first call must build")
+    assert(Artifacts.count("shingle_index") == before + 1, "first call must build")
     Dedup.containmentPairs(docs, "doc_id", "text", 3, 9, 10).collect()
     Dedup.ngramJaccardPairs(docs, "text", "doc_id").collect()
     Dedup.prefixFilterJoin(docs, "text", "doc_id", tauNum = 1, tauDen = 2).collect()
-    assert(Dedup.shingleIndexCount == before + 1,
+    assert(Artifacts.count("shingle_index") == before + 1,
       "later family members (and other thresholds) must reuse the index, not rebuild")
   }
 

@@ -294,15 +294,15 @@ class EdgeCaseSpec extends SparkSpec {
     // prints only the schema — the regression DedupSpec caught live)
     val a = Seq((1L, "aa bb cc")).toDF("doc_id", "text")
     val b = Seq((1L, "xx yy zz")).toDF("doc_id", "text")
-    assert(Scratch.planDigest(a) !== Scratch.planDigest(b),
+    assert(Artifacts.planDigest(a) !== Artifacts.planDigest(b),
       "same-schema different-data corpora must key apart")
-    assert(Scratch.planDigest(a) === Scratch.planDigest(
+    assert(Artifacts.planDigest(a) === Artifacts.planDigest(
       Seq((1L, "aa bb cc")).toDF("doc_id", "text")),
       "identical local corpora must share a key")
     val sf = "/root/testdata/sf0.001"
     val p = Tables.documents(spark, sf).select("doc_id", "text")
     val q = Tables.documents(spark, sf).select("doc_id", "text")
-    assert(Scratch.planDigest(p) === Scratch.planDigest(q),
+    assert(Artifacts.planDigest(p) === Artifacts.planDigest(q),
       "two reads of one parquet table must share a key")
     // round-17 ADVICE regression: a canonicalized parquet scan prints
     // NO path, so two same-schema corpora at different dirs collided
@@ -311,7 +311,7 @@ class EdgeCaseSpec extends SparkSpec {
     // digest must fold the scan's physical identity (rootPaths).
     val p2 = Tables.documents(spark, "/root/testdata/sf0.01")
       .select("doc_id", "text")
-    assert(Scratch.planDigest(p) !== Scratch.planDigest(p2),
+    assert(Artifacts.planDigest(p) !== Artifacts.planDigest(p2),
       "same-schema parquet corpora at different paths must key apart")
   }
 

@@ -309,25 +309,25 @@ class GraphSpec extends SparkSpec {
   test("co-purchase artifact builds once across both consumers") {
     val sf = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$sf/orders.parquet").exists)
-    val before = graft.queries.GraphQueries.coPurchaseArtifactCount
+    val before = Artifacts.count("copurchase_edges")
     assert(graft.queries.GraphQueries.triangleCount(spark, sf).count() > 0)
-    val built = graft.queries.GraphQueries.coPurchaseArtifactCount
+    val built = Artifacts.count("copurchase_edges")
     assert(built <= before + 1, "first consumer builds at most one artifact")
     assert(graft.queries.GraphQueries
       .commonNeighborsQ(spark, sf).count() > 0)
-    assert(graft.queries.GraphQueries.coPurchaseArtifactCount == built,
+    assert(Artifacts.count("copurchase_edges") == built,
       "second consumer must reuse the artifact, not rebuild")
   }
 
   test("trade-edge artifact builds once across pagerank and bfs") {
     val sf = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$sf/orders.parquet").exists)
-    val before = graft.queries.GraphQueries.edgeArtifactCount
+    val before = Artifacts.count("trade_edges")
     assert(graft.queries.GraphQueries.pagerank(spark, sf).count() > 0)
-    val built = graft.queries.GraphQueries.edgeArtifactCount
+    val built = Artifacts.count("trade_edges")
     assert(built <= before + 1, "first consumer builds at most one artifact")
     assert(graft.queries.GraphQueries.bfsHops(spark, sf).count() > 0)
-    assert(graft.queries.GraphQueries.edgeArtifactCount == built,
+    assert(Artifacts.count("trade_edges") == built,
       "second consumer must reuse the artifact, not rebuild")
   }
 
@@ -342,7 +342,7 @@ class GraphSpec extends SparkSpec {
     // localCheckpoint.
     val t = "graft_spec_bedges"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    val dir = graft.Scratch.tempDir("graft-spec-bedges-")
+    val dir = graft.Artifacts.tempDir("graft-spec-bedges-")
     Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (1L, 3L), (3L, 1L))
       .toDF("src", "dst")
       .repartition(4, $"src")

@@ -17,9 +17,9 @@ class PlanSpec extends SparkSpec {
   test("enrichment joins broadcast the small side") {
     assert(plan("join_enrich").contains("BroadcastHashJoin"))
     assert(plan("geo_enrichment").contains("BroadcastHashJoin"))
-    // the memoized (cached) geo cache must still broadcast into the
-    // report pipeline — an InMemoryRelation build side is no excuse to
-    // shuffle the log table
+    // the geo cache parquet artifact must still broadcast into the
+    // report pipeline — a file-scan build side is no excuse to shuffle
+    // the log table
     assert(plan("elb_hourly_geo").contains("BroadcastHashJoin"))
   }
 
@@ -77,12 +77,12 @@ class PlanSpec extends SparkSpec {
     // round-17 directive: the bench used to pay the two bucketed
     // ingests on EVERY run — the exact cost the operator exists to
     // amortize. Constructing the query twice must write once.
-    val before = graft.queries.JoinQueries.bucketedArtifactCount
+    val before = Artifacts.count("bucketed_join")
     graft.queries.JoinQueries.bucketedJoin(spark, "/root/testdata/sf0.001")
-    val built = graft.queries.JoinQueries.bucketedArtifactCount
+    val built = Artifacts.count("bucketed_join")
     assert(built <= before + 1, "first call builds at most one pair")
     graft.queries.JoinQueries.bucketedJoin(spark, "/root/testdata/sf0.001")
-    assert(graft.queries.JoinQueries.bucketedArtifactCount == built,
+    assert(Artifacts.count("bucketed_join") == built,
       "second call must reuse the bucketed tables, not re-ingest")
   }
 
