@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every registered query executed end-to-end at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -15,36 +13,27 @@ import org.apache.spark.sql.SparkSession
   * sample conflates plan cost with host noise; the median also absorbs
   * first-run JVM/codegen warmup. Repeats are round-robin (full suite,
   * then again) so one steal burst cannot inflate all samples of a query.
-  * Optional argv: comma-separated query names for local iteration.
+  * Optional argv: comma-separated query names for local iteration
+  * ([[SparkEntry.select]]; an unknown name fails the run).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    val only: Option[Set[String]] =
-      if (args.nonEmpty) Some(args(0).split(",").toSet) else None
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.select(args.headOption)
+    val spark = GraftSession.local(defaultCpus = 32)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
 
     // Optional machine-written floor/lever LEDGER (round 15): with
     // SPARK_GRAFT_LEDGER=<path>, a listener attributes jobs/stages/
     // tasks/task-time/shuffle bytes to the in-flight query and the
     // median-wall repeat's row is written as a markdown table —
     // the per-round diffable record the sf10 top-10 audits used to
-    // reconstruct by hand from Profile runs. Collection costs one
-    // short listener-settle pause per run OUTSIDE the timed window;
-    // the timed measurements are unchanged.
+    // reconstruct by hand. Collection costs one short listener-settle
+    // pause per run OUTSIDE the timed window; the timed measurements
+    // are unchanged.
     val ledgerPath = sys.env.get("SPARK_GRAFT_LEDGER")
     case class RunMetrics(wall: Double, jobs: Int, stages: Int, tasks: Int,
       taskTimeMs: Long, shReadB: Long, shWriteB: Long)
@@ -114,7 +103,7 @@ object Bench {
     def calibMt(): Double = {
       import org.apache.spark.sql.functions._
       val t0 = System.nanoTime()
-      spark.range(0L, 64000000L, 1L, cpus.toInt)
+      spark.range(0L, 64000000L, 1L, cpus)
         .select(xxhash64(col("id")).as("h"))
         .agg(bit_xor(col("h"))) // xor: overflow-free under ANSI mode
         .write.format("noop").mode("overwrite").save()
@@ -207,7 +196,7 @@ object Bench {
         }
         .sortBy(-_._2.wall)
         .foreach { case (name, m) =>
-          val parEff = m.taskTimeMs / 1000.0 / math.max(m.wall, 1e-9) / cpus.toInt
+          val parEff = m.taskTimeMs / 1000.0 / math.max(m.wall, 1e-9) / cpus
           val shape =
             if (m.wall >= 1.0 && parEff < 0.15) "driver-bound"
             else if (m.shWriteB == 0L) "map-only"

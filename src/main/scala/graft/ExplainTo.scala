@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write the `explain("formatted")` plan of registered
   * queries to files — the plans/rNN/<query>_<suffix>.txt evidence the
   * optimization rounds commit for every touched query.
@@ -10,22 +8,14 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainTo {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    val queries = SparkEntry.select(Some(args(0)))
     val outDir = java.nio.file.Paths.get(args(1))
     val suffix = args(2)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 32)
     java.nio.file.Files.createDirectories(outDir)
-    names.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
+    queries.foreach { case (name, fn) =>
+      val plan = fn(spark, sfDir)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(

@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.StaticGeoProvider
 
 /** Differential-parity entry point: run the whole batch pipeline
@@ -21,14 +19,7 @@ import graft.sources.StaticGeoProvider
 object RefDiffRun {
   def main(args: Array[String]): Unit = {
     val Array(logsGlob, cachePath, outDir, clockMillis) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 8)
 
     val featured = ElbPipeline.run(spark, logsGlob, cachePath, outDir,
       StaticGeoProvider(new Timestamp(clockMillis.toLong)))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** BENCH-ONLY data scaler: writes an N× copy-shifted variant of a
@@ -28,14 +28,7 @@ object ScaleGen {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft-sf1"
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 32)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def maxOf(df: DataFrame, c: String): Long =

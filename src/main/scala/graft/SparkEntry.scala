@@ -46,4 +46,18 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     oracleModules.reduce(_ ++ _)
+
+  /** The queries a main runs, sorted by name: every registered query
+    * when `filter` is empty, else exactly the names in the comma list.
+    * Any unknown name throws, naming each one — a typo must fail the
+    * run, not run nothing and report an empty total.
+    */
+  def select(filter: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val names = filter.fold(all.keySet)(_.split(",", -1).toSet)
+    val unknown = names -- all.keySet
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query names: ${unknown.toSeq.sorted.map("'" + _ + "'").mkString(", ")}")
+    names.toSeq.sorted.map(n => n -> all(n))
+  }
 }

@@ -203,6 +203,27 @@ class EdgeCaseSpec extends SparkSpec {
     assert(unverified === Set.empty, s"queries without oracles: $unverified")
   }
 
+  test("query filter: none selects every query, sorted by name") {
+    val names = SparkEntry.select(None).map(_._1)
+    assert(names === SparkEntry.queries.keys.toSeq.sorted)
+  }
+
+  test("query filter: a comma list selects exactly those queries") {
+    val picked = SparkEntry.select(Some("sessionize,hourly_agg,sessionize"))
+    assert(picked.map(_._1) === Seq("hourly_agg", "sessionize"))
+  }
+
+  test("query filter: unknown names throw and are all named") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("hourly_agg,no_such_q,sesionize")))
+    assert(e.getMessage.contains("'no_such_q'"))
+    assert(e.getMessage.contains("'sesionize'"))
+    assert(!e.getMessage.contains("'hourly_agg'"))
+    // an empty entry (trailing comma, empty argument) is unknown too
+    intercept[IllegalArgumentException](SparkEntry.select(Some("")))
+    intercept[IllegalArgumentException](SparkEntry.select(Some("hourly_agg,")))
+  }
+
   test("output gate: no registered query emits raw array/map/struct columns") {
     // The driver's correctness harness sorts result frames in pandas,
     // which cannot factorize ndarray cells — a raw ArrayType (or

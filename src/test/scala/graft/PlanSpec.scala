@@ -226,7 +226,7 @@ class PlanSpec extends SparkSpec {
       // CoresetSpec instead.
       "mixture_sample" -> "crossJoin of the single global-totals row",
       "similarity_pq" -> "broadcast codebook fan-out for encoding + broadcast per-query ADC LUTs",
-      // audited via PlanDump: 4 BNLJs, all BuildRight/Cross over
+      // audited from the executed plan: 4 BNLJs, all BuildRight/Cross over
       // IdentityBroadcastMode builds of the ≤16-row trained-centroid
       // (cell routing) and ≤16-row PQ codebook (code assign + LUT)
       // frames; the scoring join is a BroadcastHashJoin on `cell`.

@@ -11,11 +11,11 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# GRAFT_JAVA_OPTS: extra -D flags (e.g. a spark.* conf override such as
-# the RocksDB state-store provider) picked up by SparkSession.builder.
+# GRAFT_JAVA_OPTS: extra -D flags (e.g. a spark.* conf such as the
+# RocksDB state-store provider) picked up by SparkSession.builder. The
+# UI, time zone, master and shuffle partitions are set by
+# graft.GraftSession, whose values win over a -D flag.
 exec java $ADD_OPENS $GRAFT_JAVA_OPTS \
   -Xmx"${SPARK_DRIVER_MEM:-16g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "$@"
