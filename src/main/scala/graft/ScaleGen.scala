@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *     dedup input, not a scale measurement);
   *   - embeddings.embedding: dimensions rotated per copy — norms and
   *     within-copy geometry identical, cross-copy cosine uncorrelated.
-  * `events.ts` stays raw INT64 nanos (read with the same legacy conf
-  * [[Tables.events]] uses), so the output directory is drop-in
-  * compatible with every Tables loader.
+  * `events.ts` keeps the source's encoding (INT64-nanos fixtures read
+  * as raw longs under the legacy conf [[GraftSession]] sets), so the
+  * output directory is drop-in compatible with every Tables loader.
   */
 object ScaleGen {
   def main(args: Array[String]): Unit = {
@@ -29,7 +29,6 @@ object ScaleGen {
     val out = if (args.length > 1) args(1) else "/tmp/graft-sf1"
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
     val spark = GraftSession.local(defaultCpus = 32)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).head().getLong(0) + 1L

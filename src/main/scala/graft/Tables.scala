@@ -62,13 +62,13 @@ object Tables {
   }
 
   /** The fixtures' `ts` encoding has drifted across driver regenerations:
-    * parquet TIMESTAMP(NANOS) (read as raw longs via the legacy conf, then
-    * truncated ns→µs like DuckDB does) and parquet timestamp[us]
-    * (TIMESTAMP_NTZ to Spark). Branch on the ACTUAL loaded dtype so either
-    * encoding normalizes to TimestampType (session tz is UTC everywhere, so
-    * the NTZ→TZ cast is an identity on the underlying micros) — and any
-    * future third encoding fails with one loud error instead of 50 broken
-    * queries.
+    * parquet TIMESTAMP(NANOS) (read as raw longs via the legacy conf
+    * [[GraftSession]] sets, then truncated ns→µs like DuckDB does) and
+    * parquet timestamp[us] (TIMESTAMP_NTZ to Spark). Branch on the
+    * ACTUAL loaded dtype so either encoding normalizes to TimestampType
+    * (session tz is UTC everywhere, so the NTZ→TZ cast is an identity on
+    * the underlying micros) — and any future third encoding fails with
+    * one loud error instead of 50 broken queries.
     */
   def normalizeTs(tsType: DataType): Column = tsType match {
     case LongType          => expr("timestamp_micros(ts DIV 1000)")
@@ -80,8 +80,6 @@ object Tables {
   }
 
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    // harmless for µs fixtures; required for the reader to accept ns ones
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, sfDir, "events")
     raw.withColumn("ts", normalizeTs(raw.schema("ts").dataType))
   }

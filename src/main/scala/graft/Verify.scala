@@ -9,6 +9,7 @@ object Verify {
     // local iteration (the driver always runs the full set).
     val queries = SparkEntry.select(args.lift(2))
     val spark = GraftSession.local(defaultCpus = 4)
+    val setup = GraftSession.setup(spark)
     new java.io.File(outDir).mkdirs()
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -32,6 +33,13 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // a query that changes the session changes every later query's plan
+    val drift = GraftSession.drift(setup, GraftSession.setup(spark))
     spark.stop()
+    if (drift.nonEmpty) {
+      System.err.println(
+        s"[verify] the queries changed the session set-up:\n  ${drift.mkString("\n  ")}")
+      sys.exit(1)
+    }
   }
 }

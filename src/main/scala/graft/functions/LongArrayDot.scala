@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -38,8 +37,8 @@ case class LongArrayDot(left: Expression, right: Expression)
 
   /** Same null semantics as the builtin aggregate(zip_with(·,·,*),0,+)
     * idiom: length mismatch (zip_with null-pads the short side) or a
-    * null element yields NULL, so RewriteLongDot is exactly
-    * semantics-preserving.
+    * null element yields NULL, so swapping one for the other is
+    * exactly semantics-preserving (ExpressionSpec pins the equality).
     */
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]

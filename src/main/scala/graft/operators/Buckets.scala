@@ -21,11 +21,6 @@ import org.apache.spark.sql.DataFrame
   * column FIRST (bucketing-within-partitions), which is a layout
   * decision above this helper's pay grade and documented in SCALE.md.
   *
-  * `graft.artifact.buckets` (session conf) overrides everything — the
-  * operational escape hatch when the planner's estimate is wrong
-  * (e.g. a filter the stats can't see through) or a deployment wants
-  * the count pinned across sessions that must share one artifact.
-  *
   * The count is resolved ONCE per artifact build and baked into the
   * written layout; readers take whatever the table was written with
   * (bucket-to-bucket joins only need the two sides to AGREE, which
@@ -65,16 +60,8 @@ object Buckets {
     */
   def artifact(source: DataFrame, floor: Int = DefaultFloor): Int = {
     require(floor >= 1 && floor <= Max, s"floor $floor out of [1, $Max]")
-    val conf =
-      source.sparkSession.conf.get("graft.artifact.buckets", "").trim
-    if (conf.nonEmpty) {
-      val n = conf.toInt
-      require(n >= 1 && n <= Max, s"graft.artifact.buckets=$n out of [1, $Max]")
-      n
-    } else {
-      val bytes = source.queryExecution.optimizedPlan.stats.sizeInBytes
-      val need = (bytes + TargetBucketBytes - 1) / TargetBucketBytes
-      need.min(BigInt(Max)).max(BigInt(floor)).toInt
-    }
+    val bytes = source.queryExecution.optimizedPlan.stats.sizeInBytes
+    val need = (bytes + TargetBucketBytes - 1) / TargetBucketBytes
+    need.min(BigInt(Max)).max(BigInt(floor)).toInt
   }
 }

@@ -37,15 +37,6 @@ import graft.functions.LongArrayDot
   */
 object Clustering {
 
-  /** Runtime range assertion as a column: passes `c` through when in
-    * [lo, hi], raises a diagnosable error otherwise. Codegen-friendly
-    * (when/raise_error), so the per-row corpus-side norm check costs
-    * one branch inside the existing scan stage.
-    */
-  private def assertBetween(c: Column, lo: Long, hi: Long, msg: String): Column =
-    when(c.between(lo, hi), c)
-      .otherwise(raise_error(concat(lit(msg + ", got "), c.cast("string"))))
-
   /** Quantized corpus projection: (id, q, n2). */
   private def prep(df: DataFrame, idCol: String, embCol: String): DataFrame =
     df.select(col(idCol), Dedup.quantize(col(embCol)).as("q"))
@@ -184,19 +175,6 @@ object Clustering {
       lloydCentroidRowsPrepped(prep(df, idCol, embCol), df, idCol, embCol,
         k, iterations, salt)
     }
-
-  /** Exact integer squared L2 of EVERY (row, centroid) pair — the
-    * un-argmin'd fan-out [[assign]] collapses. Diagnostics surface
-    * (probe-curve sweeps need the full per-cell ranking); the corpus
-    * side streams against the broadcast centroid table.
-    */
-  def cellDistances(df: DataFrame, idCol: String, embCol: String,
-      centroids: DataFrame): DataFrame =
-    prep(df, idCol, embCol)
-      .crossJoin(broadcast(centroids))
-      .select(col(idCol), col("cluster"),
-        (col("n2") + col("cn2")
-          - lit(2L) * LongArrayDot.long_dot(col("q"), col("cq"))).as("dist2"))
 
   /** Pre-quantized assignment against DRIVER-HELD centroids: one
     * map-only projection through the codegen'd

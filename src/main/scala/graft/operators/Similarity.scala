@@ -670,7 +670,7 @@ object Similarity {
     * with fewer vectors).
     */
   private def pqCodebook(prep: DataFrame, idCol: String, subspaces: Int,
-      dsub: Int, codebookSize: Int, trainRounds: Int = 1): Array[Array[Long]] = {
+      dsub: Int, codebookSize: Int, trainRounds: Int): Array[Array[Long]] = {
     require(trainRounds >= 1, s"trainRounds must be >= 1, got $trainRounds")
     // a graft.Artifacts state value like Clustering.lloydCentroids: the
     // codebook is index state, trained once per (corpus plan, dials)
@@ -957,7 +957,6 @@ object Similarity {
       s"codebookSize in [2,256], got $codebookSize")
     val dsub = dims / subspaces
     val mult = 1L << 20
-    import graft.functions.LongArrayDot.long_dot
 
     // trained coarse quantizer (tiny: nCentroids × dims), driver-held —
     // routing is the map-only round-18 kernel shape of [[ivfTopK]]

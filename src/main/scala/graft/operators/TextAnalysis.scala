@@ -242,16 +242,6 @@ object TextAnalysis {
   def winnowMinTwin(text: Column): Column =
     array_min(transform(Dedup.shingles(text, 5), sh => md5(sh)))
 
-  /** Winnow fingerprints as a table (id, winnow_min) via explode +
-    * aggregate — md5 on the codegen'd row path; prefer on hot paths
-    * over the array-HOF [[winnowMin]].
-    */
-  def winnowTable(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, k: Int = 5): org.apache.spark.sql.DataFrame =
-    df.select(col(idCol), explode(Dedup.shingles(col(textCol), k)).as("sh"))
-      .groupBy(col(idCol))
-      .agg(min(md5(col("sh"))).as("winnow_min"))
-
   /** Duplicate word-n-gram fraction within a document (the Gopher
     * repetition signal: boilerplate and looping generations score
     * high): `1 − distinct_ngrams / total_ngrams`, 0 for texts shorter

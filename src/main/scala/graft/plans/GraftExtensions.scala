@@ -7,21 +7,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{ElbParseFields, ElbUnquote, GearChunks, KMinValues, LongArrayDot, Md5WindowChunks, SpaceSaving, TopKByScore, TopKStringByScore, WordShingles}
 
 /** Session extensions exposing graft's custom Catalyst expressions to
-  * SQL. Install with either:
-  * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  *   // or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
-  * after which `SELECT elb_parse_fields(line)`, `elb_unquote(s)`, and
+  * SQL, installed once when the session is built
+  * ([[graft.GraftSession.builder]] calls
+  * `withExtensions(new GraftExtensions)`). After that
+  * `SELECT elb_parse_fields(line)`, `elb_unquote(s)` and
   * `long_dot(a, b)` work from plain SQL — the same codegen'd expressions
   * the DataFrame API uses, no UDF registration per session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
+  override def apply(e: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => RewriteLongDot)
-  }
 }
 
 object GraftExtensions {
@@ -29,10 +24,8 @@ object GraftExtensions {
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
-  /** The function set, shared between builder-time injection and
-    * live-session registration.
-    */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  /** The SQL function set. */
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("elb_parse_fields"),
       info("elb_parse_fields",
         "elb_parse_fields(line) - parse an ELB log line into its 29 quote-stripped fields, null if short"),
@@ -81,18 +74,5 @@ object GraftExtensions {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
     case other =>
       throw new IllegalArgumentException(s"k must be an integer literal, got: $other")
-  }
-
-  /** Register on an already-running session (extensions only apply at
-    * builder time; getOrCreate on a live context skips them).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    functions.foreach { case (id, inf, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(RewriteLongDot)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteLongDot
-    }
   }
 }

@@ -125,10 +125,6 @@ object MiscQueries {
   }
 
   def streamingSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    // the local-partition pre-merge is a session-global conf — enabled
-    // here at the query composition root, documented, never inside the
-    // sessionAgg builder (round-17 ADVICE)
-    StreamingPipeline.enableLocalSessionMerge(spark)
     val events = StreamingPipeline.readEvents(spark, sfDir)
     StreamingPipeline.runToMemory(
       StreamingPipeline.sessionAgg(events), "graft_stream_sessions")
@@ -255,9 +251,8 @@ object MiscQueries {
     val ips = StreamingPipeline.readEvents(spark, sfDir).select(
       concat(lit("10."), col("user_id") % 200, lit("."), col("event_id") % 250,
         lit("."), (col("event_id") * 7) % 250).as("client_ip"))
-    val q = StreamingPipeline.cacheRefreshStream(ips, cachePath,
+    StreamingPipeline.cacheRefreshStream(ips, cachePath,
       graft.sources.StaticGeoProvider(JoinQueries.FixedClock))
-    q.awaitTermination()
     spark.read.schema(graft.operators.GeoCache.schema).parquet(cachePath)
   }
 

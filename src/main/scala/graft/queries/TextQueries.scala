@@ -118,12 +118,12 @@ object TextQueries {
     T.vocabTopK(Tables.distributed(spark, sfDir, "documents"),
       textCol = "text", groupCol = "lang", k = 20)
 
-  /** The same vocabulary query written in PURE SQL against the
-    * registered custom aggregate — proving the extension surface is a
-    * first-class way to drive the library, not just the Scala API.
+  /** The same vocabulary query written in PURE SQL against the custom
+    * aggregate the session builder installs — proving the extension
+    * surface is a first-class way to drive the library, not just the
+    * Scala API.
     */
   def sqlVocabTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     Tables.distributed(spark, sfDir, "documents")
       .createOrReplaceTempView("documents_v")
     spark.sql(

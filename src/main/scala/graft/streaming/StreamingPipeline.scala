@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming twin of the batch pipeline (SURVEY.md §2.8).
@@ -30,7 +30,6 @@ object StreamingPipeline {
     * drift now either adapts or fails analysis loudly, never lies.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val fileSchema = spark.read
       .option("pathGlobFilter", "events.parquet").parquet(dir).schema
     spark.readStream.schema(fileSchema)
@@ -51,46 +50,6 @@ object StreamingPipeline {
     * the batch `{key}_s{n}` format use [[sessionIds]], whose
     * oracle-verified twin is the `streaming_session_ids` query.
     */
-  /** Enable the local-partition session pre-merge — collapses each
-    * micro-batch partition's events into merged candidate sessions
-    * MAP-SIDE before the state store sees them (round-16 directive:
-    * state operations then scale with sessions, not events — the
-    * aggregation analog of map-side combine; off upstream only because
-    * of the added per-partition sort, and our batches are event-heavy
-    * per key). This is a SESSION-GLOBAL physical-planning conf with no
-    * per-query scope, so it is set HERE, explicitly, by the query
-    * composition roots that want it — never as a hidden side effect
-    * inside a pure-looking builder (round-17 ADVICE). It is
-    * semantics-preserving for every other streaming query, so the
-    * one-way latch is safe.
-    */
-  def enableLocalSessionMerge(spark: SparkSession): Unit =
-    spark.conf.set(
-      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
-      "true")
-
-  /** Point every checkpoint surface (offset/commit logs, file-source
-    * and file-sink metadata logs, state store deltas/snapshots) at
-    * [[org.apache.spark.sql.execution.streaming.checkpointing
-    * .NioCheckpointFileManager]] — round 17. Without the Hadoop native
-    * library, Hadoop's local filesystems FORK a `chmod` per
-    * permissioned create/mkdir and write `.crc` siblings per file;
-    * state-store provider inits serialize those forks under the global
-    * `loadedProviders` lock (thread dump: 31/32 task threads queued
-    * behind one `Shell.runCommand`). The NIO manager keeps the same
-    * atomic-rename contract through plain syscalls. Session-global by
-    * nature (the conf is read per started query), so it is set HERE,
-    * explicitly, by the run entry points — never inside a query
-    * builder; deployments checkpointing to HDFS/S3 must not enable it
-    * (the manager fail-louds on non-local paths). Set-if-absent so an
-    * operator's explicit choice of manager wins.
-    */
-  def enableNioCheckpoints(spark: SparkSession): Unit =
-    if (spark.conf.getOption(
-        "spark.sql.streaming.checkpointFileManagerClass").isEmpty)
-      spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.NioCheckpointFileManager")
-
   def sessionAgg(events: DataFrame, gap: String = "30 minutes"): DataFrame = {
     events.withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), gap), col("user_id"))
@@ -464,24 +423,25 @@ object StreamingPipeline {
     * → keep-newest upsert → atomic swap of the parquet path) via
     * foreachBatch — the canonical shape for a streaming pipeline whose
     * side output is a keyed table. AvailableNow processes the backlog
-    * and stops, exactly the cron contract; a continuous trigger would
-    * incrementally maintain the same cache.
+    * and stops, exactly the cron contract; this returns the finished
+    * query. A continuous trigger would incrementally maintain the same
+    * cache.
     */
   def cacheRefreshStream(
       logs: DataFrame,
       cachePath: String,
-      provider: graft.sources.GeoProvider): org.apache.spark.sql.streaming.StreamingQuery = {
-    enableNioCheckpoints(logs.sparkSession)
-    logs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val old = graft.operators.GeoCache.load(spark, cachePath)
-        val updated = graft.operators.GeoCache.refresh(batch.toDF(), old, provider)
-        graft.sources.Sinks.overwriteInPlace(updated, cachePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      provider: graft.sources.GeoProvider): StreamingQuery =
+    runScoped(logs.sparkSession) {
+      logs.writeStream
+        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val spark = batch.sparkSession
+          val old = graft.operators.GeoCache.load(spark, cachePath)
+          val updated = graft.operators.GeoCache.refresh(batch.toDF(), old, provider)
+          graft.sources.Sinks.overwriteInPlace(updated, cachePath)
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
 
   /** Run a streaming DataFrame to completion over static input
     * (Trigger.AvailableNow + memory sink) and return the result — the
@@ -495,12 +455,11 @@ object StreamingPipeline {
     * for state-store posture checks (StreamingSpec's RocksDB twin).
     */
   def runToMemoryWithQuery(df: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Complete())
-      : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
-    enableNioCheckpoints(df.sparkSession)
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      mode: OutputMode = OutputMode.Complete()): (DataFrame, StreamingQuery) = {
+    val q = runScoped(df.sparkSession) {
+      df.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+    }
     (df.sparkSession.table(name), q)
   }
 
@@ -519,16 +478,51 @@ object StreamingPipeline {
     * checkpoint/_spark_metadata); dirs die with the JVM via
     * [[graft.Artifacts.tempDir]].
     */
-  def runToParquet(df: DataFrame, name: String)
-      : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
-    enableNioCheckpoints(df.sparkSession)
+  def runToParquet(df: DataFrame, name: String): (DataFrame, StreamingQuery) = {
     val dir = graft.Artifacts.tempDir(s"graft-stream-$name-")
-    val q = df.writeStream.format("parquet")
-      .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val q = runScoped(df.sparkSession) {
+      df.writeStream.format("parquet")
+        .option("path", s"$dir/out")
+        .option("checkpointLocation", s"$dir/ckpt")
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow()).start()
+    }
     (df.sparkSession.read.parquet(s"$dir/out"), q)
+  }
+
+  private val CheckpointManager = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Starts a stream and runs it to completion with two confs set for
+    * this run only; the prior values come back in a `finally`. The scope
+    * spans `start()` through `awaitTermination()`: the stream thread
+    * clones the session and opens its offset log after `start()`.
+    *  - The local-partition session pre-merge collapses each partition's
+    *    events into candidate sessions map-side, so state work scales
+    *    with sessions, not events. Only `session_window` ([[sessionAgg]])
+    *    reads it; it is off upstream because of the added sort.
+    *  - [[org.apache.spark.sql.execution.streaming.checkpointing
+    *    .NioCheckpointFileManager]], set only if no manager is, writes
+    *    the offset/commit logs, metadata logs and state store files.
+    *    Without the Hadoop native library, Hadoop's local filesystem
+    *    forks a `chmod` per create/mkdir, and state-store inits
+    *    serialize those forks under one global lock (a thread dump caught
+    *    31 of 32 task threads queued behind one). Local paths only.
+    * Scoped per run, not set by [[graft.GraftSession]], because sessions
+    * built elsewhere (the benchmark's) run these streams too.
+    */
+  private def runScoped(spark: SparkSession)(start: => StreamingQuery): StreamingQuery = {
+    val scoped = Map(
+      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true") ++
+      Option.when(spark.conf.getOption(CheckpointManager).isEmpty)(CheckpointManager ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.NioCheckpointFileManager")
+    val prior = spark.conf.getAll
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = start
+      q.awaitTermination()
+      q
+    } finally scoped.keys.foreach { k =>
+      prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 }

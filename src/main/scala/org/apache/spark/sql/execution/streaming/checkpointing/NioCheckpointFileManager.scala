@@ -7,7 +7,7 @@ import java.nio.file.{Files, NoSuchFileException, Path => JPath, Paths, Standard
 import java.util.Comparator
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FSDataInputStream, FSDataOutputStream, FSInputStream, Path, PathFilter}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FSDataInputStream, FSInputStream, Path, PathFilter}
 
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -36,8 +36,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * the permission forks and checksum siblings), and
   * `FileNotFoundException` signatures matching Hadoop's so
   * `HDFSMetadataLog`/state-store callers see identical semantics.
-  * Wired by [[graft.streaming.StreamingPipeline.enableNioCheckpoints]]
-  * via `spark.sql.streaming.checkpointFileManagerClass` — a LOCAL-FS
+  * Set for the length of each run by the stream runners of
+  * [[graft.streaming.StreamingPipeline]] (`runToMemory`, `runToParquet`,
+  * `cacheRefreshStream`) via
+  * `spark.sql.streaming.checkpointFileManagerClass` — a LOCAL-FS
   * choice: deployments checkpointing to HDFS/S3 keep the default
   * manager (this class refuses non-local schemes loudly).
   */

@@ -336,18 +336,13 @@ class EdgeCaseSpec extends SparkSpec {
       "same-schema parquet corpora at different paths must key apart")
   }
 
-  test("Buckets dial: floor at toy scale, conf override wins, bounds enforced") {
+  test("Buckets dial: floor at toy scale, floor bounds enforced") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     assert(graft.operators.Buckets.artifact(docs) ==
       graft.operators.Buckets.DefaultFloor,
       "a toy corpus sizes to the floor (layout unchanged at test SF)")
-    spark.conf.set("graft.artifact.buckets", "64")
-    try {
-      assert(graft.operators.Buckets.artifact(docs) == 64,
-        "the session conf must override the derived count")
-      spark.conf.set("graft.artifact.buckets", "0")
-      intercept[IllegalArgumentException](
-        graft.operators.Buckets.artifact(docs))
-    } finally spark.conf.unset("graft.artifact.buckets")
+    assert(graft.operators.Buckets.artifact(docs, floor = 64) == 64)
+    intercept[IllegalArgumentException](
+      graft.operators.Buckets.artifact(docs, floor = 0))
   }
 }

@@ -129,14 +129,12 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("word_shingles is SQL-callable once registered") {
-    graft.plans.GraftExtensions.register(spark)
     val got = spark.sql("SELECT word_shingles('a b c d', 3) AS s")
       .as[Seq[String]].head()
     assert(got === Seq("a b c", "b c d"))
   }
 
   test("cdc chunkers are SQL-callable once registered") {
-    graft.plans.GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT gear_chunks('the quick brown fox jumps over the lazy dog', 4, 4, 16) AS g,
         |  md5_chunks('short text') AS m""".stripMargin).head()
@@ -149,7 +147,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("top_k aggregates are SQL-callable once registered") {
-    graft.plans.GraftExtensions.register(spark)
     spark.range(0, 20).select((col("id") % 10).cast("double").as("s"),
         col("id").as("i"), concat(lit("tok"), col("id")).as("t"))
       .createOrReplaceTempView("topk_in")
@@ -165,7 +162,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("sketch aggregates are SQL-callable once registered") {
-    graft.plans.GraftExtensions.register(spark)
     spark.range(0, 100).select((col("id") % 7).cast("string").as("item"),
         (col("id") % 40).as("h"))
       .createOrReplaceTempView("sk_in")
@@ -182,33 +178,7 @@ class ExpressionSpec extends SparkSpec {
     assert(kmv.getLong(0) === 8L && kmv.getLong(1) === 7L) // bottom-8 of 0..39
   }
 
-  test("RewriteLongDot leaves a non-identity finish lambda alone") {
-    graft.plans.GraftExtensions.register(spark)
-    val df = spark.range(1, 2)
-      .select(array($"id", $"id" + 1).as("a"), array($"id" + 2, $"id" + 3).as("b"))
-      .selectExpr("aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v, acc -> acc + 1) AS d")
-    assert(!df.queryExecution.optimizedPlan.expressions.exists(_.exists(
-      _.isInstanceOf[graft.functions.LongArrayDot])))
-    assert(df.as[Long].head() === (1 * 3 + 2 * 4) + 1)
-  }
-
-  test("RewriteLongDot turns the builtin HOF dot idiom into LongArrayDot") {
-    graft.plans.GraftExtensions.register(spark)
-    // non-foldable source: constant folding would otherwise collapse a
-    // literal input to a LocalRelation before the rewrite is observable
-    val df = spark.range(1, 2)
-      .select(array($"id", $"id" + 1).as("a"), array($"id" + 2, $"id" + 3).as("b"))
-      .select(aggregate(zip_with($"a", $"b", (x, y) => x * y),
-        lit(0L), (acc, v) => acc + v).as("d"))
-    val optimized = df.queryExecution.optimizedPlan
-    assert(optimized.expressions.exists(_.exists(
-      _.isInstanceOf[graft.functions.LongArrayDot])),
-      s"rule did not fire:\n$optimized")
-    assert(df.as[Long].head() === 1 * 3 + 2 * 4)
-  }
-
   test("custom expressions are SQL-callable once registered") {
-    graft.plans.GraftExtensions.register(spark)
     val line = ("t " * 29).trim
     val r = spark.sql(
       "SELECT long_dot(array(1L, 2L), array(3L, 4L)) AS d, " +

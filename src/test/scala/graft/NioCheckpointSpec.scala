@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantics HDFSMetadataLog and the HDFS-backed state store rely on.
   * The END-TO-END proof is the streaming oracle family itself
   * (StreamingSpec + the 19 streaming_* queries run through the
-  * manager via StreamingPipeline.enableNioCheckpoints); these cases
-  * pin the failure-path contracts e2e runs don't exercise.
+  * manager by StreamingPipeline's stream runners, which scope its conf
+  * to each run; StreamScopeSpec checks that). These cases pin the
+  * failure-path contracts e2e runs don't exercise.
   */
 class NioCheckpointSpec extends AnyFunSuite {
 

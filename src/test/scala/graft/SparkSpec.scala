@@ -11,13 +11,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   // One session per JVM — suites share it; sbt forks a single test JVM.
+  // The mains' set-up, pinned to 4 cores whatever SPARK_GRAFT_CPUS says.
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -346,8 +346,9 @@ class StreamingSpec extends SparkSpec {
 
   test("session state updates are session/key-bounded, not event-bounded") {
     // the round-16 state-floor measurement: with local-partition
-    // session merge (sessionAgg) events pre-collapse into candidate
-    // sessions BEFORE the state store, and the custom sessionizer
+    // session merge (which every runner's run turns on) events
+    // pre-collapse into candidate sessions BEFORE the state store, and
+    // the custom sessionizer
     // updates one state row per (key, batch) — so numRowsUpdated must
     // track sessions/keys, never raw events
     val sf = "/root/testdata/sf0.001"
@@ -356,7 +357,6 @@ class StreamingSpec extends SparkSpec {
       .select("user_id").distinct().count()
     def updated(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
       q.recentProgress.flatMap(_.stateOperators.map(_.numRowsUpdated)).sum
-    StreamingPipeline.enableLocalSessionMerge(spark)
     val (sess, q1) = StreamingPipeline.runToMemoryWithQuery(
       StreamingPipeline.sessionAgg(StreamingPipeline.readEvents(spark, sf)),
       "supd_sessions", OutputMode.Append())
