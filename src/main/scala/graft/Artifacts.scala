@@ -16,7 +16,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `DataFrame`, digested with [[planDigest]], or a fixture directory.
   * Because a key names only an input corpus and its dials, the
   * registry can hold a layout derived from an input but never a
-  * query's result.
+  * query's result. The session UUID comes first because sessions in
+  * one JVM share the catalog: a layout's table names are the md5 of
+  * its key, and without the UUID two sessions would name the same
+  * table and one session's [[clear]] would drop the other's. So names
+  * differ between sessions and between runs by design. The digest of
+  * the corpus does not differ between sessions in one JVM; it may
+  * between JVMs, since `semanticHash` folds object identity hashes.
   *
   * '''Lifetime.''' An artifact lives until [[clear]] or JVM exit:
   * every dir comes from [[tempDir]] and dies with the JVM (one

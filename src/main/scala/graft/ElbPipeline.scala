@@ -11,11 +11,20 @@ import graft.sources.{GeoProvider, Sinks}
   *
   * Stage/shuffle budget of the whole DAG (SURVEY.md §3.1): the
   * parse+filter+features chain is narrow (pipelined inside the scan
-  * stage); the geo cache is broadcast (no probe-side shuffle); the only
-  * exchanges are the new-IP distinct (tiny), one hash partition on
-  * client_ip shared by sessionize+rolling, and one per aggregate
-  * rollup. The reference's six sequential full-frame materializations
-  * collapse into this single lazy plan.
+  * stage); the geo cache is broadcast (no probe-side shuffle). The
+  * exchanges a run performs are the new-IP distinct and the cache
+  * upsert (one row per IP each), one hash exchange on client_ip for
+  * sessionize, the cleaned-logs sink's repartition by its partition
+  * columns, and one per grouped report. Rolling adds none: the client_ip
+  * hash already clusters its (client_ip, hour-block) windows. The
+  * chunked rolling's union plans sessionize twice, once under the rows
+  * and once under their next-block carries; adaptive execution runs the
+  * two identical exchanges as one shuffle that both branches read, but
+  * the sessionize sort and window run in each branch. (perfbench's
+  * `--trace 1` checkpoints between the two layers, so there rolling
+  * shows its own 2×-row exchange on (client_ip, hour-block).) The
+  * reference's six sequential full-frame materializations collapse into
+  * this single lazy plan.
   */
 object ElbPipeline {
 

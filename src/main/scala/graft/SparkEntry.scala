@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry (SURVEY.md §7).
   *
-  * Each entry in [[queries]] is one operator from SURVEY.md §2 (or a
-  * training-data-pipeline op), runnable standalone over a testdata sf
-  * directory; [[oracleSql]] carries the DuckDB twin the driver verifies
-  * against at sf0.01.
+  * Each query module lists its queries once, as `name -> Query(run,
+  * oracle)` entries: the function runs the operator standalone over a
+  * testdata sf directory, and the oracle is the DuckDB SQL its result
+  * is checked against at sf0.01. [[queries]] and [[oracleSql]] are
+  * derived from those entries, so a query cannot ship without an oracle.
   */
 object SparkEntry {
 
@@ -17,35 +18,38 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     EventQueries.hourlyAgg(spark, "/root/testdata/sf0.001")
 
-  /** Per-module registries, kept as a list so EdgeCaseSpec can assert
-    * the union is collision-free — `Map ++` silently keeps the LAST
-    * binding, so a duplicate name across modules would shadow an
-    * existing query without any compile- or run-time signal.
+  /** Every registered query, module by module: one entry per operator
+    * from SURVEY.md §2 (or a training-data-pipeline op), each with its
+    * DuckDB twin.
     */
-  val queryModules: Seq[Map[String, (SparkSession, String) => DataFrame]] = Seq(
-    EventQueries.queries, ElbQueries.queries, JoinQueries.queries,
-    PipelineQueries.queries, DocQueries.queries, VecQueries.queries,
-    TextQueries.queries, MiscQueries.queries, CurationQueries.queries,
-    ClusterQueries.queries, AnalyticsQueries.queries, SketchQueries.queries,
-    TpchQueries.queries, GraphQueries.queries, JourneyQueries.queries,
-    RobustQueries.queries, PrivacyQueries.queries, FeatureQueries.queries)
+  val entries: Seq[(String, Query)] = Seq(
+    EventQueries.entries, ElbQueries.entries, JoinQueries.entries,
+    PipelineQueries.entries, DocQueries.entries, VecQueries.entries,
+    TextQueries.entries, MiscQueries.entries, CurationQueries.entries,
+    ClusterQueries.entries, AnalyticsQueries.entries, SketchQueries.entries,
+    TpchQueries.entries, GraphQueries.entries, JourneyQueries.entries,
+    RobustQueries.entries, PrivacyQueries.entries, FeatureQueries.entries
+  ).flatten
 
-  val oracleModules: Seq[Map[String, String]] = Seq(
-    EventQueries.oracle, ElbQueries.oracle, JoinQueries.oracle,
-    PipelineQueries.oracle, DocQueries.oracle, VecQueries.oracle,
-    TextQueries.oracle, MiscQueries.oracle, CurationQueries.oracle,
-    ClusterQueries.oracle, AnalyticsQueries.oracle, SketchQueries.oracle,
-    TpchQueries.oracle, GraphQueries.oracle, JourneyQueries.oracle,
-    RobustQueries.oracle, PrivacyQueries.oracle, FeatureQueries.oracle)
+  /** Entries by name. A name registered twice, in one module or in two,
+    * throws and names each duplicate — `toMap` would silently keep the
+    * last binding and shadow a query with no compile- or run-time signal.
+    */
+  def byName(entries: Seq[(String, Query)]): Map[String, Query] = {
+    val dups = entries.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queryModules.reduce(_ ++ _)
+  private val registry = byName(entries)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    oracleModules.reduce(_ ++ _)
+  /** One function per registered query, run over an sf directory. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.view.mapValues(_.run).toMap
+
+  /** For each key in [[queries]], equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables. */
+  val oracleSql: Map[String, String] = registry.view.mapValues(_.oracle).toMap
 
   /** The queries a main runs, sorted by name: every registered query
     * when `filter` is empty, else exactly the names in the comma list.
@@ -53,11 +57,10 @@ object SparkEntry {
     * run, not run nothing and report an empty total.
     */
   def select(filter: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
-    val all = queries
-    val names = filter.fold(all.keySet)(_.split(",", -1).toSet)
-    val unknown = names -- all.keySet
+    val names = filter.fold(queries.keySet)(_.split(",", -1).toSet)
+    val unknown = names -- queries.keySet
     if (unknown.nonEmpty) throw new IllegalArgumentException(
       s"unknown query names: ${unknown.toSeq.sorted.map("'" + _ + "'").mkString(", ")}")
-    names.toSeq.sorted.map(n => n -> all(n))
+    names.toSeq.sorted.map(n => n -> queries(n))
   }
 }

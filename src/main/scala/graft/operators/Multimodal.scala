@@ -40,7 +40,7 @@ object Multimodal {
   // ---- deterministic synthesis (test-data generator) -----------------
 
   /** Valid-payload synthesis from a row id. Formulas are mirrored by
-    * the DuckDB oracle in closed form; see MiscQueries.oracle.
+    * the DuckDB oracle in closed form; see MiscQueries.entries.
     *  - id % 3 == 0 → PPM image, w = 16+(id%8)·4, h = 12+(id%5)·4,
     *    pixel byte i = (i + id) % 256
     *  - id % 3 == 1 → WAV mono 16-bit, rate = 8000+(id%3)·4000,

@@ -83,28 +83,13 @@ object Rolling {
       .where(!col("_carry")).drop("_blk", "_carry")
   }
 
-  /** The reference's exact pair: 5-min trailing request count + 1-h
-    * trailing mean processing time.
-    */
-  def addRollingFeatures(
-      df: DataFrame,
-      keyCol: String = "client_ip",
-      timeCol: String = "time",
-      countCol: String = "request",
-      avgCol: String = "total_processing_time"): DataFrame = {
-    val w5 = trailing(col(keyCol), col(timeCol), FiveMinutes)
-    val w1 = trailing(col(keyCol), col(timeCol), OneHour)
-    df.withColumn("rolling_5min_request_count", count(col(countCol)).over(w5))
-      .withColumn("rolling_1h_avg_processing", avg(col(avgCol)).over(w1))
-  }
-
-  /** [[addRollingFeatures]] through [[trailingChunked]] — identical
-    * frames (same `(t−Δ, t]` membership, so the count is bit-identical
-    * and the mean agrees to summation-order ulps), but the window
-    * partitions by (key, hour-block) with carry replication instead of
-    * by key alone: a hot IP splits into per-block tasks instead of one
-    * straggler. This is the [[graft.ElbPipeline]] default — the plain
-    * variant stays as the minimal-shape twin and skew-table baseline.
+  /** The reference's exact pair, a 5-min trailing request count and a
+    * 1-h trailing mean processing time, through [[trailingChunked]]:
+    * the frames have [[trailing]]'s `(t−Δ, t]` membership, so the count
+    * is bit-identical and the mean agrees to summation-order ulps, but
+    * the window partitions by (key, hour-block) with carry replication
+    * instead of by key alone, so a hot IP splits into per-block tasks
+    * instead of one straggler. [[graft.ElbPipeline.features]] runs it.
     */
   def addRollingFeaturesChunked(
       df: DataFrame,

@@ -456,35 +456,8 @@ object AnalyticsQueries {
     Evaluation.ksStatistic(Tables.events(spark, sfDir), "value",
       col("event_type") === "purchase")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "auc_exact" -> aucExact,
-    "calibration_bins" -> calibrationBins,
-    "ks_statistic" -> ksStatistic,
-    "rolling_median" -> rollingMedian,
-    "anomaly_zscore" -> anomalyZscore,
-    "cusum_changepoint" -> cusumExcursions,
-    "snapshot_diff" -> snapshotDiff,
-    "cdc_apply" -> cdcApply,
-    "agg_incremental" -> aggIncremental,
-    "stats_corr" -> statsCorr,
-    "stats_ols" -> statsOls,
-    "market_basket" -> marketBasket,
-    "array_funcs" -> arrayFuncs,
-    "gap_fill" -> gapFill,
-    "window_funcs" -> windowFuncs,
-    "json_extract" -> jsonExtract,
-    "concurrency_peak" -> concurrencyPeak,
-    "interval_union" -> intervalUnion,
-    "cube_agg" -> cubeAgg,
-    "pivot_wide" -> pivotWide,
-    "funnel_steps" -> funnelSteps,
-    "cohort_retention" -> cohortRetention,
-    "scd2_history" -> scd2History,
-    "scd2_lookup" -> scd2Lookup
-  )
-
-  val oracle: Map[String, String] = Map(
-    "auc_exact" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "auc_exact" -> Query(aucExact,
       """WITH c AS (
         |  SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS s,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
@@ -507,8 +480,8 @@ object AnalyticsQueries {
         |SELECT CAST(n_pos AS BIGINT) AS n_pos, CAST(n_neg AS BIGINT) AS n_neg,
         |  CAST(pw AS BIGINT) AS pairs_won, CAST(t AS BIGINT) AS ties,
         |  CAST(2 * pw + t AS DOUBLE) / CAST(2 * n_pos * n_neg AS DOUBLE) AS auc
-        |FROM a""".stripMargin,
-    "calibration_bins" ->
+        |FROM a""".stripMargin),
+    "calibration_bins" -> Query(calibrationBins,
       """WITH c AS (
         |  SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS s,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
@@ -521,8 +494,8 @@ object AnalyticsQueries {
         |  CAST(sum(s) AS BIGINT) AS sum_cents,
         |  CAST(sum(s) AS DOUBLE) / CAST(100 * count(*) AS DOUBLE) AS mean_score,
         |  CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS frac_pos
-        |FROM b GROUP BY bin""".stripMargin,
-    "ks_statistic" ->
+        |FROM b GROUP BY bin""".stripMargin),
+    "ks_statistic" -> Query(ksStatistic,
       """WITH c AS (
         |  SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS s,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS a
@@ -542,8 +515,8 @@ object AnalyticsQueries {
         |  CAST(max(abs(cuma * tb - cumb * ta)) AS BIGINT) AS max_cross,
         |  CAST(max(abs(cuma * tb - cumb * ta)) AS DOUBLE)
         |    / CAST(max(ta) * max(tb) AS DOUBLE) AS ks_d
-        |FROM w""".stripMargin,
-    "cusum_changepoint" ->
+        |FROM w""".stripMargin),
+    "cusum_changepoint" -> Query(cusumExcursions,
       """WITH c AS (
         |  SELECT user_id, ts, event_id,
         |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
@@ -565,8 +538,8 @@ object AnalyticsQueries {
         |SELECT user_id, n, max_dev, min_dev,
         |  CAST(max_dev - min_dev AS DOUBLE) / (100 * n) AS excursion
         |FROM g
-        |WHERE CAST(max_dev - min_dev AS DOUBLE) / (100 * n) > 550.0""".stripMargin,
-    "anomaly_zscore" ->
+        |WHERE CAST(max_dev - min_dev AS DOUBLE) / (100 * n) > 550.0""".stripMargin),
+    "anomaly_zscore" -> Query(anomalyZscore,
       """WITH cents AS (
         |  SELECT event_id, user_id, ts, value,
         |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
@@ -582,8 +555,8 @@ object AnalyticsQueries {
         |)
         |SELECT event_id, user_id, ts, value, n
         |FROM win
-        |WHERE n >= 8 AND (n*x - s)*(n*x - s) > 4*(n*q - s*s)""".stripMargin,
-    "snapshot_diff" ->
+        |WHERE n >= 8 AND (n*x - s)*(n*x - s) > 4*(n*q - s*s)""".stripMargin),
+    "snapshot_diff" -> Query(snapshotDiff,
       """WITH neu AS (
         |  SELECT o_orderkey,
         |    CASE WHEN o_orderkey % 7 = 0 THEN 'X-DIFF'
@@ -611,8 +584,8 @@ object AnalyticsQueries {
         |             OR o.o_orderstatus IS DISTINCT FROM n.o_orderstatus
         |             OR o.o_totalprice IS DISTINCT FROM n.o_totalprice
         |             OR o.o_orderdate IS DISTINCT FROM n.o_orderdate
-        |           THEN 'changed' END IS NOT NULL""".stripMargin,
-    "market_basket" ->
+        |           THEN 'changed' END IS NOT NULL""".stripMargin),
+    "market_basket" -> Query(marketBasket,
       """WITH bi AS (
         |  SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
         |), nb AS (
@@ -640,9 +613,9 @@ object AnalyticsQueries {
         |FROM p
         |JOIN isup sa ON sa.i = item_a
         |JOIN isup sb ON sb.i = item_b
-        |CROSS JOIN nb""".stripMargin,
+        |CROSS JOIN nb""".stripMargin),
     // decimal→DOUBLE via VARCHAR for the same reason as stats_ols
-    "stats_corr" ->
+    "stats_corr" -> Query(statsCorr,
       """WITH m AS (
         |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
         |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
@@ -666,12 +639,12 @@ object AnalyticsQueries {
         |  (dxy * n - dx * dy) / (CAST(n AS DOUBLE) * n) AS cov_pop,
         |  (dxy * n - dx * dy)
         |    / sqrt((dxx * n - dx * dx) * (dyy * n - dy * dy)) AS corr
-        |FROM d""".stripMargin,
+        |FROM d""".stripMargin),
     // decimals reach DOUBLE via VARCHAR: DuckDB's direct decimal cast
     // double-rounds (int128 / 10^scale as two float ops), while Spark's
     // BigDecimal path is correctly rounded — strtod on the decimal's
     // exact string form matches Spark bit-for-bit.
-    "stats_ols" ->
+    "stats_ols" -> Query(statsOls,
       """WITH m AS (
         |  SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
         |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
@@ -697,8 +670,8 @@ object AnalyticsQueries {
         |    AS intercept,
         |  ((dxy * n - dx * dy) * (dxy * n - dx * dy))
         |    / ((dxx * n - dx * dx) * (dyy * n - dy * dy)) AS r2
-        |FROM d""".stripMargin,
-    "array_funcs" ->
+        |FROM d""".stripMargin),
+    "array_funcs" -> Query(arrayFuncs,
       """WITH dt AS (
         |  SELECT user_id, event_type FROM events GROUP BY 1, 2
         |)
@@ -709,8 +682,8 @@ object AnalyticsQueries {
         |  list_contains(list(event_type ORDER BY event_type), 'purchase')
         |    AS has_purchase,
         |  list(event_type ORDER BY event_type)[1] AS first_type
-        |FROM dt GROUP BY user_id""".stripMargin,
-    "gap_fill" ->
+        |FROM dt GROUP BY user_id""".stripMargin),
+    "gap_fill" -> Query(gapFill,
       """WITH daily AS (
         |  SELECT user_id, CAST(date_trunc('DAY', ts) AS DATE) AS day,
         |    CAST(count(*) AS BIGINT) AS n_events,
@@ -736,8 +709,8 @@ object AnalyticsQueries {
         |SELECT la.user_id, la.day, la.n_events, la.last_active_day,
         |  d.day_value AS ff_value
         |FROM la JOIN daily d
-        |  ON la.user_id = d.user_id AND la.last_active_day = d.day""".stripMargin,
-    "window_funcs" ->
+        |  ON la.user_id = d.user_id AND la.last_active_day = d.day""".stripMargin),
+    "window_funcs" -> Query(windowFuncs,
       """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
         |  CAST(rank() OVER w AS BIGINT) AS rk,
         |  CAST(dense_rank() OVER w AS BIGINT) AS drk,
@@ -747,8 +720,8 @@ object AnalyticsQueries {
         |  lag(o_totalprice, 1) OVER w AS prev_price,
         |  lead(o_totalprice, 1) OVER w AS next_price
         |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin,
-    "json_extract" ->
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin),
+    "json_extract" -> Query(jsonExtract,
       """SELECT event_type,
         |  count(k) AS n_with_k,
         |  CAST(sum(k) AS BIGINT) AS sum_k,
@@ -756,8 +729,8 @@ object AnalyticsQueries {
         |FROM (SELECT event_type,
         |        CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
         |      FROM events)
-        |GROUP BY event_type""".stripMargin,
-    "interval_union" ->
+        |GROUP BY event_type""".stripMargin),
+    "interval_union" -> Query(intervalUnion,
       """WITH iv AS (
         |  SELECT user_id, epoch_us(ts) AS st,
         |    epoch_us(ts) + CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
@@ -783,8 +756,8 @@ object AnalyticsQueries {
         |  CAST(sum(n) AS BIGINT) AS n_intervals,
         |  CAST(sum(ien - ist) AS BIGINT) AS covered_us,
         |  CAST(max(ien) - min(ist) AS BIGINT) AS span_us
-        |FROM g GROUP BY 1""".stripMargin,
-    "concurrency_peak" ->
+        |FROM g GROUP BY 1""".stripMargin),
+    "concurrency_peak" -> Query(concurrencyPeak,
       """WITH d AS (
         |  SELECT event_id, user_id, ts,
         |    coalesce(epoch_us(ts) - lag(epoch_us(ts)) OVER w, 0) AS td
@@ -818,8 +791,8 @@ object AnalyticsQueries {
         |  FROM bounds
         |)
         |SELECT day, CAST(max(r) AS BIGINT) AS peak_concurrency
-        |FROM run GROUP BY day""".stripMargin,
-    "cube_agg" ->
+        |FROM run GROUP BY day""".stripMargin),
+    "cube_agg" -> Query(cubeAgg,
       """SELECT event_type, m,
         |  CAST(count(*) AS BIGINT) AS n,
         |  round(sum(value), 3) AS sum_value,
@@ -828,16 +801,16 @@ object AnalyticsQueries {
         |  CAST(grouping(event_type) AS BIGINT) * 2
         |    + CAST(grouping(m) AS BIGINT) AS gid
         |FROM (SELECT event_type, month(ts) AS m, value FROM events)
-        |GROUP BY CUBE (event_type, m)""".stripMargin,
-    "pivot_wide" ->
+        |GROUP BY CUBE (event_type, m)""".stripMargin),
+    "pivot_wide" -> Query(pivotWide,
       """SELECT CAST(date_trunc('DAY', ts) AS DATE) AS day,
         |  round(sum(value) FILTER (event_type = 'click'), 3) AS click,
         |  round(sum(value) FILTER (event_type = 'error'), 3) AS error,
         |  round(sum(value) FILTER (event_type = 'purchase'), 3) AS purchase,
         |  round(sum(value) FILTER (event_type = 'signup'), 3) AS signup,
         |  round(sum(value) FILTER (event_type = 'view'), 3) AS view
-        |FROM events GROUP BY 1""".stripMargin,
-    "funnel_steps" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    "funnel_steps" -> Query(funnelSteps,
       """WITH f AS (
         |  SELECT user_id, ts, event_type,
         |    min(CASE WHEN event_type = 'view' THEN ts END)
@@ -857,8 +830,8 @@ object AnalyticsQueries {
         |  CAST(CASE WHEN max(t3) IS NOT NULL THEN 3
         |            WHEN max(t2) IS NOT NULL THEN 2
         |            WHEN max(t1) IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
-        |FROM h GROUP BY user_id""".stripMargin,
-    "cohort_retention" ->
+        |FROM h GROUP BY user_id""".stripMargin),
+    "cohort_retention" -> Query(cohortRetention,
       """WITH d AS (
         |  SELECT user_id, CAST(date_trunc('DAY', ts) AS DATE) AS day
         |  FROM events
@@ -869,8 +842,8 @@ object AnalyticsQueries {
         |)
         |SELECT cohort_day, CAST(day - cohort_day AS BIGINT) AS day_offset,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM c GROUP BY 1, 2""".stripMargin,
-    "rolling_median" ->
+        |FROM c GROUP BY 1, 2""".stripMargin),
+    "rolling_median" -> Query(rollingMedian,
       """WITH cents AS (
         |  SELECT event_id, user_id, ts,
         |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
@@ -881,8 +854,8 @@ object AnalyticsQueries {
         |  median(x) OVER w AS med_cents
         |FROM cents
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS BETWEEN 20 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "agg_incremental" ->
+        |  ROWS BETWEEN 20 PRECEDING AND CURRENT ROW)""".stripMargin),
+    "agg_incremental" -> Query(aggIncremental,
       """WITH base AS (
         |  SELECT o_orderkey, o_orderpriority,
         |    CAST(CAST(o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT) AS cents
@@ -896,8 +869,8 @@ object AnalyticsQueries {
         |)
         |SELECT grp, CAST(count(*) AS BIGINT) AS n_orders,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents
-        |FROM final GROUP BY 1""".stripMargin,
-    "cdc_apply" ->
+        |FROM final GROUP BY 1""".stripMargin),
+    "cdc_apply" -> Query(cdcApply,
       """WITH base AS (
         |  SELECT o_orderkey, o_orderpriority, o_orderstatus, o_totalprice
         |  FROM orders
@@ -927,8 +900,8 @@ object AnalyticsQueries {
         |  CASE WHEN c.op IS NOT NULL THEN c.o_totalprice
         |       ELSE b.o_totalprice END AS o_totalprice
         |FROM base b FULL OUTER JOIN latest c ON b.o_orderkey = c.o_orderkey
-        |WHERE c.op IS NULL OR c.op <> 'D'""".stripMargin,
-    "scd2_lookup" ->
+        |WHERE c.op IS NULL OR c.op <> 'D'""".stripMargin),
+    "scd2_lookup" -> Query(scd2Lookup,
       """WITH chg AS (
         |  SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
         |    row_number() OVER w AS rn,
@@ -950,8 +923,8 @@ object AnalyticsQueries {
         |SELECT f.event_id, f.user_id, f.d, iv.status, iv.valid_from
         |FROM f LEFT JOIN iv
         |  ON iv.o_custkey = f.user_id AND iv.valid_from <= f.d
-        |  AND (iv.valid_to IS NULL OR f.d < iv.valid_to)""".stripMargin,
-    "scd2_history" ->
+        |  AND (iv.valid_to IS NULL OR f.d < iv.valid_to)""".stripMargin),
+    "scd2_history" -> Query(scd2History,
       """WITH chg AS (
         |  SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
         |    row_number() OVER w AS rn,
@@ -967,6 +940,6 @@ object AnalyticsQueries {
         |  lead(o_orderdate) OVER w2 AS valid_to,
         |  lead(o_orderdate) OVER w2 IS NULL AS is_current
         |FROM runs
-        |WINDOW w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin
+        |WINDOW w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin)
   )
 }

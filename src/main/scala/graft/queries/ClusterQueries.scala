@@ -71,15 +71,6 @@ object ClusterQueries {
         .select("vec_id", "embedding"),
       "vec_id", "embedding", k = K)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "kmeans_assign" -> kmeansAssign,
-    "kmeans_update" -> kmeansUpdate,
-    "kmeans_assign2" -> kmeansAssign2,
-    "kmeans_sse" -> kmeansSse,
-    "kcenter_coreset" -> kcenterCoreset,
-    "cluster_balanced_sample" -> clusterBalancedSample
-  )
-
   // -- oracle SQL ------------------------------------------------------
 
   /** Quantize → seed draw → exact integer distances → argmin; ends with
@@ -188,28 +179,28 @@ object ClusterQueries {
     (base +: steps).mkString(",\n") + "\n" + out.mkString("\nUNION ALL\n")
   }
 
-  val oracle: Map[String, String] = Map(
-    "kcenter_coreset" -> kcenterOracle(K),
-    "kmeans_assign" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "kcenter_coreset" -> Query(kcenterCoreset, kcenterOracle(K)),
+    "kmeans_assign" -> Query(kmeansAssign,
       s"""$assignCte
-         |SELECT vec_id, cluster, dist2 FROM a""".stripMargin,
-    "kmeans_assign2" ->
+         |SELECT vec_id, cluster, dist2 FROM a""".stripMargin),
+    "kmeans_assign2" -> Query(kmeansAssign2,
       s"""$assign2Cte
-         |SELECT vec_id, cluster, dist2 FROM a2""".stripMargin,
-    "kmeans_sse" ->
+         |SELECT vec_id, cluster, dist2 FROM a2""".stripMargin),
+    "kmeans_sse" -> Query(kmeansSse,
       s"""$assign2Cte
          |SELECT CAST(1 AS INT) AS round, CAST(count(*) AS BIGINT) AS n_vecs,
          |  CAST(sum(dist2) AS BIGINT) AS sse FROM a
          |UNION ALL
          |SELECT CAST(2 AS INT), CAST(count(*) AS BIGINT),
-         |  CAST(sum(dist2) AS BIGINT) FROM a2""".stripMargin,
-    "cluster_balanced_sample" ->
+         |  CAST(sum(dist2) AS BIGINT) FROM a2""".stripMargin),
+    "cluster_balanced_sample" -> Query(clusterBalancedSample,
       s"""$assignCte
          |SELECT vec_id, cluster FROM (
          |  SELECT vec_id, cluster, row_number() OVER (PARTITION BY cluster
          |      ORDER BY md5('cap:' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
-         |  FROM a) WHERE rn <= 40""".stripMargin,
-    "kmeans_update" ->
+         |  FROM a) WHERE rn <= 40""".stripMargin),
+    "kmeans_update" -> Query(kmeansUpdate,
       s"""$assignCte,
          |e AS (SELECT a.cluster, q.qv,
          |        unnest(generate_series(1, len(q.qv))) AS i
@@ -218,6 +209,6 @@ object ClusterQueries {
          |  CAST(count(*) AS BIGINT) AS n_vecs,
          |  round(CAST(sum(qv[i]) AS BIGINT)::DOUBLE / (count(*) * 10000), 6)
          |    AS centroid
-         |FROM e GROUP BY cluster, i""".stripMargin
+         |FROM e GROUP BY cluster, i""".stripMargin)
   )
 }

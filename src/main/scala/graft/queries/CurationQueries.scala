@@ -200,21 +200,10 @@ object CurationQueries {
         min(unix_micros(col("ts"))).as("min_us"),
         max(unix_micros(col("ts"))).as("max_us"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "split_temporal" -> splitTemporal,
-    "seq_pack" -> seqPack,
-    "pack_emit" -> packEmit,
-    "doc_chunks" -> docChunks,
-    "embedding_centroids" -> embeddingCentroids,
-    "range_join" -> rangeJoin,
-    "corpus_shuffle" -> corpusShuffle,
-    "curate_corpus" -> curateCorpus
-  )
-
   // -- oracle SQL ------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
-    "split_temporal" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "split_temporal" -> Query(splitTemporal,
       """WITH b AS (
         |  SELECT min(epoch_us(ts)) AS mn, max(epoch_us(ts)) AS mx FROM events
         |), s AS (
@@ -227,8 +216,8 @@ object CurationQueries {
         |SELECT split, CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  CAST(min(us) AS BIGINT) AS min_us, CAST(max(us) AS BIGINT) AS max_us
-        |FROM s GROUP BY 1""".stripMargin,
-    "seq_pack" ->
+        |FROM s GROUP BY 1""".stripMargin),
+    "seq_pack" -> Query(seqPack,
       s"""WITH t AS (SELECT doc_id,
          |    CAST(${TextQueries.nWords} AS BIGINT) AS n_tokens FROM documents),
          |c AS (SELECT doc_id, n_tokens,
@@ -240,8 +229,8 @@ object CurationQueries {
          |  CAST((start_offset + n_tokens - 1) // 512 AS BIGINT) AS end_pack,
          |  CAST((start_offset + n_tokens - 1) // 512
          |    - start_offset // 512 + 1 AS BIGINT) AS n_packs
-         |FROM c""".stripMargin,
-    "pack_emit" ->
+         |FROM c""".stripMargin),
+    "pack_emit" -> Query(packEmit,
       s"""WITH t AS (SELECT doc_id,
          |    CAST(${TextQueries.nWords} AS BIGINT) AS n_tokens FROM documents),
          |c AS (SELECT doc_id, n_tokens,
@@ -259,8 +248,8 @@ object CurationQueries {
          |    - greatest(start_offset, pack_id * 512) + 1) AS BIGINT) AS n_tokens,
          |  md5(string_agg(CAST(doc_id AS VARCHAR), ','
          |    ORDER BY start_offset, doc_id)) AS docs_md5
-         |FROM e GROUP BY pack_id""".stripMargin,
-    "doc_chunks" ->
+         |FROM e GROUP BY pack_id""".stripMargin),
+    "doc_chunks" -> Query(docChunks,
       """WITH n AS (SELECT doc_id, text,
         |    CASE WHEN length(text) <= 200 THEN 1
         |         ELSE (length(text) - 200 + 149) // 150 + 1 END AS n_chunks
@@ -271,8 +260,8 @@ object CurationQueries {
         |  CAST(length(substr(text, CAST(ci * 150 + 1 AS BIGINT), 200)) AS INT)
         |    AS chunk_len,
         |  md5(substr(text, CAST(ci * 150 + 1 AS BIGINT), 200)) AS chunk_md5
-        |FROM i""".stripMargin,
-    "embedding_centroids" ->
+        |FROM i""".stripMargin),
+    "embedding_centroids" -> Query(embeddingCentroids,
       """SELECT label, CAST(i - 1 AS INT) AS dim,
         |  CAST(count(*) AS BIGINT) AS n_vecs,
         |  round(CAST(sum(CAST(round(CAST(embedding[i] AS DOUBLE) * 10000) AS BIGINT)) AS BIGINT)::DOUBLE
@@ -280,15 +269,15 @@ object CurationQueries {
         |FROM (SELECT label, embedding,
         |        unnest(generate_series(1, len(embedding))) AS i
         |      FROM embeddings)
-        |GROUP BY label, i""".stripMargin,
-    "corpus_shuffle" ->
+        |GROUP BY label, i""".stripMargin),
+    "corpus_shuffle" -> Query(corpusShuffle,
       """SELECT doc_id,
         |  md5('shuffle:' || CAST(doc_id AS VARCHAR)) AS shuffle_key,
         |  CAST(row_number() OVER (
         |    ORDER BY md5('shuffle:' || CAST(doc_id AS VARCHAR))) - 1
         |    AS BIGINT) AS shuffle_rank
-        |FROM documents""".stripMargin,
-    "curate_corpus" ->
+        |FROM documents""".stripMargin),
+    "curate_corpus" -> Query(curateCorpus,
       s"""${DocQueries.clusterScoredCte},
          |canon AS (SELECT cluster, n_docs, doc_id AS canonical_doc,
          |    round(q, 6) AS quality
@@ -296,8 +285,8 @@ object CurationQueries {
          |SELECT d.doc_id, c.cluster, CAST(c.n_docs AS BIGINT) AS cluster_size,
          |  c.quality, ${TextQueries.nWords} AS n_tokens
          |FROM documents d JOIN canon c ON d.doc_id = c.canonical_doc
-         |WHERE (${TextQueries.langPredExpr}) = 'en' AND c.quality >= 0.2""".stripMargin,
-    "range_join" ->
+         |WHERE (${TextQueries.langPredExpr}) = 'en' AND c.quality >= 0.2""".stripMargin),
+    "range_join" -> Query(rangeJoin,
       """WITH w AS (SELECT o_orderkey AS window_id,
         |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS start_day,
         |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
@@ -310,6 +299,6 @@ object CurationQueries {
         |  round(sum(l_quantity), 3) AS sum_qty,
         |  round(sum(l_extendedprice), 3) AS sum_price
         |FROM p JOIN w ON p.ship_day BETWEEN w.start_day AND w.end_day
-        |GROUP BY window_id""".stripMargin
+        |GROUP BY window_id""".stripMargin)
   )
 }

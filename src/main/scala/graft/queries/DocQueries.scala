@@ -331,31 +331,6 @@ object DocQueries {
           .as("recall"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_recall" -> (dedupRecall _),
-    "dedup_semantic" -> dedupSemantic,
-    "dedup_containment" -> dedupContainment,
-    "cdc_chunks" -> cdcChunks,
-    "cdc_dedup_stats" -> cdcDedupStats,
-    "streaming_cdc_dedup" -> streamingCdcDedup,
-    "dedup_cdc_pairs" -> cdcSharedPairs,
-    "dedup_ssjoin" -> dedupSsjoin,
-    "dedup_substring" -> dedupSubstring,
-    "split_leakage_safe" -> splitLeakageSafe,
-    "dedup_clusters" -> dedupClusters,
-    "dedup_weights" -> dedupWeights,
-    "dedup_norm_exact" -> dedupNormExact,
-    "dedup_canonical" -> dedupCanonical,
-    "dedup_incremental" -> dedupIncremental,
-    "decontaminate" -> decontaminate,
-    "dedup_embedding_lsh" -> dedupEmbeddingLsh,
-    "dedup_exact" -> dedupExact,
-    "dedup_minhash" -> dedupMinhash,
-    "dedup_simhash" -> dedupSimhash,
-    "dedup_ngram_jaccard" -> dedupJaccard,
-    "dedup_embedding" -> dedupEmbedding
-  )
-
   // -- oracle SQL ------------------------------------------------------
 
   /** Distinct word-3-gram shingle rows per doc over `table` (min doc
@@ -471,11 +446,11 @@ object DocQueries {
       |    list_append(bnds, len) AS ends
       |  FROM b)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val entries: Seq[(String, Query)] = Seq(
     // truth = the ssjoin brute-force pair set (threshold verbatim);
     // candidates = the dedup_minhash band join over the same corpus;
     // the metrics row is pure integer counting
-    "dedup_recall" ->
+    "dedup_recall" -> Query(dedupRecall,
       s"""WITH $setSimCorpusCte,
          |shr AS MATERIALIZED (${shingleRowsOver("d")}),
          |sizes AS MATERIALIZED (
@@ -506,8 +481,8 @@ object DocQueries {
          |SELECT n_truth, n_candidates, n_hits,
          |  round(CAST(n_hits AS DOUBLE) / n_candidates, 6) AS precision,
          |  round(CAST(n_hits AS DOUBLE) / n_truth, 6) AS recall
-         |FROM m""".stripMargin,
-    "cdc_chunks" ->
+         |FROM m""".stripMargin),
+    "cdc_chunks" -> Query(cdcChunks,
       s"""WITH $cdcChunkCte,
          |h AS (
          |  SELECT doc_id, len,
@@ -519,8 +494,8 @@ object DocQueries {
          |SELECT doc_id, CAST(len AS BIGINT) AS n_chars,
          |  CAST(length(hashes) AS BIGINT) AS n_chunks,
          |  md5(array_to_string(hashes, '')) AS chunk_sig
-         |FROM h""".stripMargin,
-    "cdc_dedup_stats" ->
+         |FROM h""".stripMargin),
+    "cdc_dedup_stats" -> Query(cdcDedupStats,
       s"""WITH $cdcChunkCte,
          |pieces AS (
          |  SELECT unnest(list_filter(list_transform(starts, (s, i) ->
@@ -536,8 +511,8 @@ object DocQueries {
          |  CAST(count(*) AS BIGINT) AS n_distinct_chunks,
          |  CAST(sum(cnt * len) AS BIGINT) AS total_bytes,
          |  CAST(sum(len) AS BIGINT) AS distinct_bytes
-         |FROM grouped""".stripMargin,
-    "dedup_substring" -> {
+         |FROM grouped""".stripMargin),
+    "dedup_substring" -> Query(dedupSubstring, {
       val k = 8
       val gram = (0 until k).map(i => s"words[pos+$i]").mkString(" || ' ' || ")
       s"""WITH w AS (
@@ -577,11 +552,11 @@ object DocQueries {
          |  round(CAST(coalesce(a.dup_tokens, 0) AS DOUBLE)
          |    / len(string_split(d0.text, ' ')), 6) AS dup_ratio
          |FROM documents d0 LEFT JOIN agg a USING (doc_id)""".stripMargin
-    },
+    }),
     // brute-force twin of the prefix-filtered join: EVERY pair sharing
     // a shingle, thresholded by the same integer inequality — prefix
     // filtering only prunes candidates, so the sets must be identical
-    "dedup_ssjoin" ->
+    "dedup_ssjoin" -> Query(dedupSsjoin,
       s"""WITH $setSimCorpusCte,
          |shr AS (${shingleRowsOver("d")}),
          |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
@@ -595,8 +570,8 @@ object DocQueries {
          |FROM inter
          |JOIN sizes sa ON sa.doc_id = doc_a
          |JOIN sizes sb ON sb.doc_id = doc_b
-         |WHERE 8 * inter >= 3 * (sa.sz + sb.sz)""".stripMargin,
-    "dedup_cdc_pairs" ->
+         |WHERE 8 * inter >= 3 * (sa.sz + sb.sz)""".stripMargin),
+    "dedup_cdc_pairs" -> Query(cdcSharedPairs,
       s"""WITH $cdcChunkCte,
          |pieces AS (
          |  SELECT doc_id AS doc, unnest(list_filter(list_transform(starts, (s, i) ->
@@ -611,8 +586,8 @@ object DocQueries {
          |  CAST(count(*) AS BIGINT) AS shared_chunks
          |FROM f a JOIN f b ON a.h = b.h AND a.doc < b.doc
          |GROUP BY a.doc, b.doc
-         |HAVING count(*) >= 1""".stripMargin,
-    "streaming_cdc_dedup" ->
+         |HAVING count(*) >= 1""".stripMargin),
+    "streaming_cdc_dedup" -> Query(streamingCdcDedup,
       s"""WITH $cdcChunkCte,
          |pieces AS (
          |  SELECT unnest(list_filter(list_transform(starts, (s, i) ->
@@ -620,8 +595,8 @@ object DocQueries {
          |      THEN substr(text, s, ends[i] - s + 1) END),
          |    x -> x IS NOT NULL)) AS chunk
          |  FROM ch)
-         |SELECT DISTINCT md5(chunk) AS chunk_hash FROM pieces""".stripMargin,
-    "dedup_incremental" ->
+         |SELECT DISTINCT md5(chunk) AS chunk_hash FROM pieces""".stripMargin),
+    "dedup_incremental" -> Query(dedupIncremental,
       s"""WITH shr AS ($shingleRows),
          |sigs AS (SELECT doc_id, $sigExprs FROM shr GROUP BY doc_id),
          |bands AS ($bandSelects),
@@ -637,17 +612,17 @@ object DocQueries {
          |       GROUP BY f.doc_id)
          |SELECT m.doc_id, coalesce(mt.dup_of, -1) AS dup_of,
          |  mt.dup_of IS NOT NULL AS is_dup
-         |FROM m LEFT JOIN mt USING (doc_id) WHERE NOT m.is_base""".stripMargin,
-    "dedup_canonical" ->
+         |FROM m LEFT JOIN mt USING (doc_id) WHERE NOT m.is_base""".stripMargin),
+    "dedup_canonical" -> Query(dedupCanonical,
       s"""$clusterScoredCte
          |SELECT cluster, CAST(n_docs AS BIGINT) AS n_docs,
          |  doc_id AS canonical_doc, round(q, 6) AS canonical_quality
-         |FROM r WHERE rn = 1""".stripMargin,
-    "dedup_clusters" ->
+         |FROM r WHERE rn = 1""".stripMargin),
+    "dedup_clusters" -> Query(dedupClusters,
       s"""WITH RECURSIVE $clusterChain
          |SELECT doc_id, coalesce(cl.cluster, doc_id) AS cluster
-         |FROM documents LEFT JOIN cl ON doc_id = cl.node""".stripMargin,
-    "dedup_weights" ->
+         |FROM documents LEFT JOIN cl ON doc_id = cl.node""".stripMargin),
+    "dedup_weights" -> Query(dedupWeights,
       s"""WITH RECURSIVE $clusterChain,
          |clustered AS (
          |  SELECT doc_id, coalesce(cl.cluster, doc_id) AS cluster
@@ -656,8 +631,8 @@ object DocQueries {
          |  FROM clustered GROUP BY cluster)
          |SELECT doc_id, cluster, cluster_size,
          |  CAST(1.0 AS DOUBLE) / CAST(cluster_size AS DOUBLE) AS weight
-         |FROM clustered JOIN sz USING (cluster)""".stripMargin,
-    "split_leakage_safe" ->
+         |FROM clustered JOIN sz USING (cluster)""".stripMargin),
+    "split_leakage_safe" -> Query(splitLeakageSafe,
       s"""WITH RECURSIVE $clusterChain,
          |clustered AS (
          |  SELECT doc_id, coalesce(cl.cluster, doc_id) AS cluster
@@ -668,8 +643,8 @@ object DocQueries {
          |       WHEN md5('clsplit:' || CAST(cluster AS VARCHAR))
          |         < '${graft.operators.Sampling.fractionThreshold(0.9)}' THEN 'val'
          |       ELSE 'test' END AS split
-         |FROM clustered""".stripMargin,
-    "decontaminate" ->
+         |FROM clustered""".stripMargin),
+    "decontaminate" -> Query(decontaminate,
       s"""WITH s AS (
          |  SELECT doc_id,
          |    md5('split:' || CAST(doc_id AS VARCHAR))
@@ -687,8 +662,8 @@ object DocQueries {
          |  CAST(te.n_sh AS INT) AS n_sh,
          |  CAST(count(*) AS DOUBLE) / te.n_sh AS contamination_ratio
          |FROM te JOIN ev USING (sh)
-         |GROUP BY te.doc_id, te.n_sh""".stripMargin,
-    "dedup_embedding_lsh" ->
+         |GROUP BY te.doc_id, te.n_sh""".stripMargin),
+    "dedup_embedding_lsh" -> Query(dedupEmbeddingLsh,
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings
          |  UNION ALL SELECT vec_id + 1099511627776, embedding FROM embeddings),
          |q AS (SELECT vec_id,
@@ -704,14 +679,14 @@ object DocQueries {
          |  a.bucket
          |FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
          |WHERE CAST(list_dot_product(a.qv, b.qv) AS BIGINT)::DOUBLE
-         |    / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) > 0.45""".stripMargin,
-    "dedup_exact" ->
+         |    / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) > 0.45""".stripMargin),
+    "dedup_exact" -> Query(dedupExact,
       """WITH d AS (SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 1099511627776, text FROM documents)
         |SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
         |  CAST(count(*) AS BIGINT) AS dup_count
-        |FROM d GROUP BY 1""".stripMargin,
-    "dedup_norm_exact" ->
+        |FROM d GROUP BY 1""".stripMargin),
+    "dedup_norm_exact" -> Query(dedupNormExact,
       """WITH d AS (SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 1099511627776, upper(text) || '  !!' FROM documents),
         |n AS (SELECT doc_id,
@@ -720,19 +695,19 @@ object DocQueries {
         |  FROM d)
         |SELECT norm_hash, min(doc_id) AS keep_id,
         |  CAST(count(*) AS BIGINT) AS dup_count
-        |FROM n GROUP BY 1""".stripMargin,
-    "dedup_minhash" ->
+        |FROM n GROUP BY 1""".stripMargin),
+    "dedup_minhash" -> Query(dedupMinhash,
       s"""WITH shr AS ($shingleRows),
          |sigs AS (SELECT doc_id, $sigExprs FROM shr GROUP BY doc_id),
          |bands AS ($bandSelects)
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |FROM bands a JOIN bands b USING (band_idx, band_hash)
-         |WHERE a.doc_id < b.doc_id""".stripMargin,
-    "dedup_simhash" ->
+         |WHERE a.doc_id < b.doc_id""".stripMargin),
+    "dedup_simhash" -> Query(dedupSimhash,
       s"""SELECT doc_id, CAST($simhashExpr AS BIGINT) AS simhash
          |FROM (SELECT doc_id, list_distinct(string_split(text, ' ')) AS words
-         |      FROM documents)""".stripMargin,
-    "dedup_ngram_jaccard" ->
+         |      FROM documents)""".stripMargin),
+    "dedup_ngram_jaccard" -> Query(dedupJaccard,
       s"""WITH $setSimCorpusCte,
          |shr AS (${shingleRowsOver("d")}),
          |sigs AS (SELECT doc_id, $sigExprs FROM shr GROUP BY doc_id),
@@ -744,11 +719,11 @@ object DocQueries {
          |SELECT c.doc_a, c.doc_b,
          |  CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
          |    / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))) AS jaccard
-         |FROM cand c JOIN da a ON a.doc_id = c.doc_a JOIN da b ON b.doc_id = c.doc_b""".stripMargin,
+         |FROM cand c JOIN da a ON a.doc_id = c.doc_a JOIN da b ON b.doc_id = c.doc_b""".stripMargin),
     // the identity-below-cap sampling rule is replayed in SQL, so the
     // cap itself stays oracle-checked (at sf0.01 it keeps every row
     // and this IS the exhaustive baseline)
-    "dedup_embedding" ->
+    "dedup_embedding" -> Query(dedupEmbedding,
       """WITH e AS (SELECT vec_id, embedding FROM embeddings
         |  UNION ALL SELECT vec_id + 1099511627776, embedding FROM embeddings),
         |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
@@ -769,8 +744,8 @@ object DocQueries {
         |FROM n a, n b
         |WHERE a.vec_id < b.vec_id
         |  AND CAST(list_dot_product(a.qv, b.qv) AS BIGINT)::DOUBLE
-        |    / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) > 0.45""".stripMargin,
-    "dedup_semantic" ->
+        |    / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) > 0.45""".stripMargin),
+    "dedup_semantic" -> Query(dedupSemantic,
       s"""${ClusterQueries.assignCteSqrtK},
          |m AS (SELECT a.vec_id, a.cluster, n.qv, n.n2
          |      FROM a JOIN n USING (vec_id)),
@@ -782,8 +757,8 @@ object DocQueries {
          |  GROUP BY 1)
          |SELECT CAST(m.cluster AS BIGINT) AS cluster, m.vec_id, p.max_cos_lo,
          |  CAST(CASE WHEN p.max_cos_lo > 0.4 THEN 0 ELSE 1 END AS BIGINT) AS kept
-         |FROM m LEFT JOIN pair p ON m.vec_id = p.vec_id""".stripMargin,
-    "dedup_containment" ->
+         |FROM m LEFT JOIN pair p ON m.vec_id = p.vec_id""".stripMargin),
+    "dedup_containment" -> Query(dedupContainment,
       s"""WITH $setSimCorpusCte,
         |shc AS (${shingleRowsOver("d")}),
         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM shc GROUP BY 1),
@@ -794,6 +769,6 @@ object DocQueries {
         |SELECT doc_a, doc_b, n_shared, sz.sz AS size_a,
         |  CAST(n_shared AS DOUBLE) / sz.sz AS containment
         |FROM inter JOIN sz ON sz.doc_id = doc_a
-        |WHERE CAST(n_shared AS DOUBLE) / sz.sz >= 0.9""".stripMargin
+        |WHERE CAST(n_shared AS DOUBLE) / sz.sz >= 0.9""".stripMargin)
   )
 }

@@ -110,14 +110,6 @@ object ElbQueries {
         countDistinct(col("client_ip")).as("n_ips"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "elb_parse" -> elbParse,
-    "elb_dsv2_parse" -> elbDsv2Parse,
-    "elb_classify" -> elbClassify,
-    "elb_features" -> elbFeatures,
-    "ip_range_lookup" -> ipRangeLookup
-  )
-
   // -- oracle SQL (DuckDB dialect) ------------------------------------
   // Shared fragments: expected values derived straight from events.
 
@@ -168,10 +160,10 @@ object ElbQueries {
         if (withFile) ",\n       |  'synthetic.log.gz' AS log_source_file" else ""}
        |FROM events WHERE ${ElbSynth.survivorsWhere}""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "elb_parse" -> parseOracle(withFile = true),
-    "elb_dsv2_parse" -> parseOracle(withFile = false),
-    "ip_range_lookup" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "elb_parse" -> Query(elbParse, parseOracle(withFile = true)),
+    "elb_dsv2_parse" -> Query(elbDsv2Parse, parseOracle(withFile = false)),
+    "ip_range_lookup" -> Query(ipRangeLookup,
       s"""WITH f AS (
          |  SELECT
          |    '10.' || (user_id % 200) || '.' || (event_id % 250) || '.'
@@ -202,8 +194,8 @@ object ElbQueries {
          |)
          |SELECT region, CAST(count(*) AS BIGINT) AS n_requests,
          |  CAST(count(DISTINCT client_ip) AS BIGINT) AS n_ips
-         |FROM j GROUP BY region""".stripMargin,
-    "elb_classify" ->
+         |FROM j GROUP BY region""".stripMargin),
+    "elb_classify" -> Query(elbClassify,
       s"""SELECT $key AS elb, $uaCase AS user_agent,
          |  CASE event_id % 6 WHEN 0 THEN 'Chrome' WHEN 1 THEN 'Safari'
          |   WHEN 2 THEN 'Firefox' WHEN 3 THEN 'Googlebot'
@@ -216,8 +208,8 @@ object ElbQueries {
          |    WHEN 'purchase' THEN '2xx_Success' WHEN 'signup' THEN '2xx_Success'
          |    WHEN 'error' THEN '5xx_ServerError' ELSE '4xx_ClientError' END END AS status_code_type,
          |  (event_id % 11 = 0 OR event_id % 11 = 5) AS waf_blocked
-         |FROM events WHERE ${ElbSynth.survivorsWhere} AND event_id % 6 <> 4""".stripMargin,
-    "elb_features" ->
+         |FROM events WHERE ${ElbSynth.survivorsWhere} AND event_id % 6 <> 4""".stripMargin),
+    "elb_features" -> Query(elbFeatures,
       s"""WITH ny AS (SELECT *, (ts AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York' AS e
          |            FROM events WHERE ${ElbSynth.survivorsWhere})
          |SELECT $key AS elb,
@@ -233,6 +225,6 @@ object ElbQueries {
          |   WHEN 3 THEN 3 WHEN 4 THEN 3 ELSE 1 END AS path_depth,
          |  CASE event_id % 6 WHEN 2 THEN 'api' WHEN 3 THEN 'api'
          |   WHEN 4 THEN 'assets' WHEN 5 THEN 'search' ELSE '' END AS path_main_segment
-         |FROM ny""".stripMargin
+         |FROM ny""".stripMargin)
   )
 }

@@ -9,8 +9,9 @@ import graft.Tables
   *
   * These exercise the engine's aggregate/window surface on generic data
   * (FIXTURES.md §3 maps `user_id` ≈ client_ip, `ts` ≈ time). Each query
-  * has a DuckDB-oracle twin in [[oracle]]; column names must match the
-  * Spark output exactly (the driver sorts columns by name before hashing).
+  * carries its DuckDB-oracle twin in [[entries]]; column names must match
+  * the Spark output exactly (the oracle compare sorts columns by name
+  * before hashing).
   *
   * Float determinism: `value` carries exactly 2 decimals, so
   * `round(sum(value), 3)` is exact in both engines regardless of
@@ -159,20 +160,8 @@ object EventQueries {
       .select(col("event_id"), col("user_id"), col("cents"),
         col("ewma_num"), col("ewma_den"), col("ewma"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ewma_features" -> ewmaQ,
-    "dedup_burst" -> dedupBurst,
-    "hopping_agg" -> hoppingAgg,
-    "hourly_agg" -> hourlyAgg,
-    "sessionize" -> sessionizeQ,
-    "rolling_window" -> rollingQ,
-    "rolling_window_chunked" -> rollingChunkedQ,
-    "rollup_agg" -> rollupAgg,
-    "sql_daily" -> sqlDaily
-  )
-
-  val oracle: Map[String, String] = Map(
-    "ewma_features" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "ewma_features" -> Query(ewmaQ,
       """WITH c AS (
         |  SELECT event_id, user_id, ts,
         |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
@@ -193,8 +182,8 @@ object EventQueries {
         |  END AS ewma
         |FROM c a JOIN c b
         |  ON a.user_id = b.user_id AND b.rn BETWEEN a.rn - 15 AND a.rn
-        |GROUP BY a.event_id, a.user_id, a.cents""".stripMargin,
-    "dedup_burst" ->
+        |GROUP BY a.event_id, a.user_id, a.cents""".stripMargin),
+    "dedup_burst" -> Query(dedupBurst,
       """WITH x AS (
         |  SELECT event_id, user_id, event_type, ts,
         |    lag(ts) OVER w AS prev_ts
@@ -215,8 +204,8 @@ object EventQueries {
         |    AS event_id,
         |  user_id, event_type, min(ts) AS ts,
         |  CAST(count(*) AS BIGINT) AS burst_len
-        |FROM b GROUP BY user_id, event_type, burst""".stripMargin,
-    "hopping_agg" ->
+        |FROM b GROUP BY user_id, event_type, burst""".stripMargin),
+    "hopping_agg" -> Query(hoppingAgg,
       """WITH hops AS (
         |  SELECT event_type, value,
         |    time_bucket(INTERVAL 15 MINUTES, ts)
@@ -226,8 +215,8 @@ object EventQueries {
         |SELECT ws, ws + INTERVAL 1 HOUR AS we, event_type,
         |  CAST(count(*) AS BIGINT) AS n,
         |  round(sum(value), 3) AS sum_value
-        |FROM hops GROUP BY 1, 2, 3""".stripMargin,
-    "hourly_agg" ->
+        |FROM hops GROUP BY 1, 2, 3""".stripMargin),
+    "hourly_agg" -> Query(hourlyAgg,
       """SELECT year(ts) AS request_year, month(ts) AS request_month,
         |  day(ts) AS request_day, hour(ts) AS request_hour, event_type,
         |  count(user_id) AS request_count,
@@ -239,8 +228,8 @@ object EventQueries {
         |  count(*) FILTER (value <= 10) AS count_lo,
         |  round(sum(value), 3) / count(user_id) AS avg_value
         |FROM events
-        |GROUP BY 1, 2, 3, 4, 5""".stripMargin,
-    "sessionize" ->
+        |GROUP BY 1, 2, 3, 4, 5""".stripMargin),
+    "sessionize" -> Query(sessionizeQ,
       """WITH d AS (
         |  SELECT event_id, user_id, ts,
         |    coalesce(epoch_us(ts) - lag(epoch_us(ts)) OVER w, 0) AS time_diff_micros
@@ -257,20 +246,20 @@ object EventQueries {
         |  CAST(sum(CASE WHEN new_session THEN 1 ELSE 0 END)
         |    OVER (PARTITION BY user_id ORDER BY ts, event_id
         |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |FROM s""".stripMargin,
-    "rollup_agg" ->
+        |FROM s""".stripMargin),
+    "rollup_agg" -> Query(rollupAgg,
       """SELECT event_type, m,
         |  CAST(count(*) AS BIGINT) AS n,
         |  round(sum(value), 3) AS sum_value,
         |  CAST(grouping(event_type) AS BIGINT) AS g_type,
         |  CAST(grouping(m) AS BIGINT) AS g_month
         |FROM (SELECT event_type, month(ts) AS m, value FROM events)
-        |GROUP BY ROLLUP (event_type, m)""".stripMargin,
-    "sql_daily" ->
+        |GROUP BY ROLLUP (event_type, m)""".stripMargin),
+    "sql_daily" -> Query(sqlDaily,
       """SELECT event_type, CAST(date_trunc('DAY', ts) AS DATE) AS day,
         |  CAST(count(*) AS BIGINT) AS n, round(sum(value), 3) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "rolling_window_chunked" ->
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    "rolling_window_chunked" -> Query(rollingChunkedQ,
       """SELECT event_id, user_id, ts,
         |  count(event_id) OVER w5 AS rolling_5min_count,
         |  CAST(sum(CAST(value AS DECIMAL(12,2))) OVER w1 AS DOUBLE)
@@ -280,8 +269,8 @@ object EventQueries {
         |  w5 AS (PARTITION BY user_id ORDER BY epoch_us(ts)
         |         RANGE BETWEEN 299999999 PRECEDING AND CURRENT ROW),
         |  w1 AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |         RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "rolling_window" ->
+        |         RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)""".stripMargin),
+    "rolling_window" -> Query(rollingQ,
       """SELECT event_id, user_id, ts,
         |  count(event_id) OVER w5 AS rolling_5min_count,
         |  CAST(sum(CAST(value AS DECIMAL(12,2))) OVER w1 AS DOUBLE)
@@ -291,6 +280,6 @@ object EventQueries {
         |  w5 AS (PARTITION BY user_id ORDER BY epoch_us(ts)
         |         RANGE BETWEEN 299999999 PRECEDING AND CURRENT ROW),
         |  w1 AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |         RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)""".stripMargin
+        |         RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)""".stripMargin)
   )
 }

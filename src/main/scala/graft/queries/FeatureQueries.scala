@@ -202,19 +202,6 @@ object FeatureQueries {
       daily.select("event_type", "x", "cnt"), "event_type", "x", "cnt")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "feature_assoc" -> (featureAssoc _),
-    "trend_theilsen" -> (trendTheilsen _),
-    "ts_acf" -> (tsAcf _),
-    "seasonal_anomaly" -> (seasonalAnomaly _),
-    "streaming_seasonal" -> (streamingSeasonal _),
-    "ts_interpolate" -> (tsInterpolate _),
-    "drift_detect" -> (driftDetect _),
-    "feature_bins" -> (featureBins _),
-    "length_buckets" -> (lengthBuckets _),
-    "bootstrap_ci" -> (bootstrapCi _)
-  )
-
   private val bootThresholds = Resample.cdfThresholds
 
   private val SeasonalOracle =
@@ -233,8 +220,8 @@ object FeatureQueries {
        |FROM c JOIN cell USING (event_type, hod)
        |WHERE abs(c.cents * n_cell - sum_cell) > 25000 * n_cell""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "ts_acf" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "ts_acf" -> Query(tsAcf,
       """WITH series AS (
         |  SELECT event_type, date_trunc('hour', ts) AS bkt,
         |    CAST(count(*) AS BIGINT) AS x
@@ -265,8 +252,8 @@ object FeatureQueries {
         |       ELSE CAST(n_pairs * sxy - sx * sy AS DOUBLE)
         |    / (sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE))
         |       * sqrt(CAST(n_pairs * syy - sy * sy AS DOUBLE))) END AS acf
-        |FROM m""".stripMargin,
-    "ts_interpolate" -> {
+        |FROM m""".stripMargin),
+    "ts_interpolate" -> Query(tsInterpolate, {
       val t10 = graft.operators.Sampling.fractionThreshold(0.1)
       s"""WITH c AS (
          |  SELECT event_id, user_id, epoch_us(ts) AS t, $centsSql AS cents
@@ -298,8 +285,8 @@ object FeatureQueries {
          |         * (CAST(tmicros - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE))
          |  END AS filled
          |FROM w""".stripMargin
-    },
-    "trend_theilsen" ->
+    }),
+    "trend_theilsen" -> Query(trendTheilsen,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS cnt
         |  FROM events GROUP BY 1, 2
@@ -319,8 +306,8 @@ object FeatureQueries {
         |SELECT event_type, CAST(max(m) AS BIGINT) AS n_pairs,
         |  (min(slope) + max(slope)) / 2.0 AS slope
         |FROM r WHERE rn = (m + 1) // 2 OR rn = m // 2 + 1
-        |GROUP BY 1""".stripMargin,
-    "feature_assoc" ->
+        |GROUP BY 1""".stripMargin),
+    "feature_assoc" -> Query(featureAssoc,
       """WITH cell AS (
         |  SELECT event_type, CAST(extract(hour FROM ts) AS BIGINT) AS hr,
         |    count(*) AS n_xy
@@ -337,8 +324,8 @@ object FeatureQueries {
         |     - (((n_x * 1000000) // n_tot) * ((n_y * 1000000) // n_tot))
         |       // 1000000 AS BIGINT) AS leverage_micro
         |FROM cell JOIN nx USING (event_type) JOIN ny USING (hr)
-        |CROSS JOIN t""".stripMargin,
-    "drift_detect" ->
+        |CROSS JOIN t""".stripMargin),
+    "drift_detect" -> Query(driftDetect,
       s"""WITH c AS (
          |  SELECT event_type, epoch_us(ts) AS t, $centsSql AS cents
          |  FROM events),
@@ -369,12 +356,12 @@ object FeatureQueries {
          |       ELSE CAST(sum(abs(a * tot_b - b * tot_a)) AS BIGINT)::DOUBLE
          |         / CAST(2 * max(tot_a) * max(tot_b) AS BIGINT)::DOUBLE
          |  END AS tv
-         |FROM t2 GROUP BY 1""".stripMargin,
-    "seasonal_anomaly" -> SeasonalOracle,
+         |FROM t2 GROUP BY 1""".stripMargin),
+    "seasonal_anomaly" -> Query(seasonalAnomaly, SeasonalOracle),
     // the streaming twin is deterministic and scores the same rows
     // against the same profile — identical oracle by construction
-    "streaming_seasonal" -> SeasonalOracle,
-    "feature_bins" ->
+    "streaming_seasonal" -> Query(streamingSeasonal, SeasonalOracle),
+    "feature_bins" -> Query(featureBins,
       """WITH c AS (
         |  SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
         |  FROM orders),
@@ -390,8 +377,8 @@ object FeatureQueries {
         |  CAST(sum(cnt) AS BIGINT) AS n_rows,
         |  min(cents) AS min_cents, max(cents) AS max_cents,
         |  CAST(sum(cents * cnt) AS BIGINT) AS sum_cents
-        |FROM cum GROUP BY 1""".stripMargin,
-    "length_buckets" ->
+        |FROM cum GROUP BY 1""".stripMargin),
+    "length_buckets" -> Query(lengthBuckets,
       s"""WITH d AS (
          |  SELECT CAST(${TextQueries.nWords} AS BIGINT) AS n_words FROM documents),
          |b AS (SELECT n_words, n_words // 16 AS bucket FROM d)
@@ -399,8 +386,8 @@ object FeatureQueries {
          |  min(n_words) AS min_words, max(n_words) AS max_words,
          |  CAST(sum(n_words) AS BIGINT) AS sum_words,
          |  CAST(sum((bucket + 1) * 16 - n_words) AS BIGINT) AS pad_waste
-         |FROM b GROUP BY bucket""".stripMargin,
-    "bootstrap_ci" ->
+         |FROM b GROUP BY bucket""".stripMargin),
+    "bootstrap_ci" -> Query(bootstrapCi,
       s"""WITH c AS (
          |  SELECT event_id, $centsSql AS cents FROM events),
          |reps AS (SELECT unnest(generate_series(0, 31)) AS rep),
@@ -421,6 +408,6 @@ object FeatureQueries {
          |  CASE WHEN CAST(sum(w) AS BIGINT) = 0 THEN NULL
          |       ELSE CAST(CAST(sum(w * cents) AS BIGINT) AS DOUBLE)
          |    / CAST(CAST(sum(w) AS BIGINT) AS DOUBLE) END AS mean_rep
-         |FROM w GROUP BY rep""".stripMargin
+         |FROM w GROUP BY rep""".stripMargin)
   )
 }

@@ -456,19 +456,8 @@ object GraphQueries {
         max(col("deg")).cast("bigint").as("max_deg"),
         sum(col("deg")).cast("bigint").as("sum_deg"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_degree_hist" -> (graphDegreeHist _),
-    "graph_assortativity" -> (graphAssortativity _),
-    "pagerank" -> (pagerank _),
-    "triangle_count" -> (triangleCount _),
-    "graph_bfs" -> (bfsHops _),
-    "graph_common_neighbors" -> (commonNeighborsQ _),
-    "pagerank_personalized" -> (pagerankPersonalized _),
-    "graph_kcore" -> (graphKcore _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "graph_degree_hist" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "graph_degree_hist" -> Query(graphDegreeHist,
       """WITH e0 AS MATERIALIZED (
         |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
         |    's' || CAST(l_suppkey AS VARCHAR) AS dst
@@ -481,8 +470,8 @@ object GraphQueries {
         |  CAST(min(deg) AS BIGINT) AS min_deg,
         |  CAST(max(deg) AS BIGINT) AS max_deg,
         |  CAST(sum(deg) AS BIGINT) AS sum_deg
-        |FROM deg GROUP BY 1""".stripMargin,
-    "graph_assortativity" ->
+        |FROM deg GROUP BY 1""".stripMargin),
+    "graph_assortativity" -> Query(graphAssortativity,
       """WITH e0 AS MATERIALIZED (
         |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
         |    's' || CAST(l_suppkey AS VARCHAR) AS dst
@@ -514,12 +503,12 @@ object GraphQueries {
         |  (dxy * n - dx * dy) / (CAST(n AS DOUBLE) * n) AS cov_pop,
         |  (dxy * n - dx * dy)
         |    / sqrt((dxx * n - dx * dx) * (dyy * n - dy * dy)) AS corr
-        |FROM d""".stripMargin,
-    "pagerank" -> oracleSqlFor(Iterations),
-    "triangle_count" -> TriangleOracle,
-    "graph_bfs" -> BfsOracle,
-    "graph_common_neighbors" -> CommonNeighborsOracle,
-    "pagerank_personalized" -> pprOracleSqlFor(Iterations),
-    "graph_kcore" -> kcoreOracleSqlFor(KcoreK, KcoreRounds)
+        |FROM d""".stripMargin),
+    "pagerank" -> Query(pagerank, oracleSqlFor(Iterations)),
+    "triangle_count" -> Query(triangleCount, TriangleOracle),
+    "graph_bfs" -> Query(bfsHops, BfsOracle),
+    "graph_common_neighbors" -> Query(commonNeighborsQ, CommonNeighborsOracle),
+    "pagerank_personalized" -> Query(pagerankPersonalized, pprOracleSqlFor(Iterations)),
+    "graph_kcore" -> Query(graphKcore, kcoreOracleSqlFor(KcoreK, KcoreRounds))
   )
 }

@@ -264,26 +264,8 @@ object JoinQueries {
           _.cast("string"))).as("members"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "entity_resolution" -> entityResolution,
-    "fuzzy_match" -> fuzzyMatch,
-    "bloom_prefilter_join" -> bloomPrefilterJoinQ,
-    "bucketed_join" -> bucketedJoin,
-    "salted_join" -> saltedJoin,
-    "asof_join" -> asofJoin,
-    "asof_join_fwd" -> asofJoinFwd,
-    "asof_join_nearest" -> asofJoinNearest,
-    "topk_per_group" -> topkPerGroup,
-    "set_ops" -> setOps,
-    "join_enrich" -> joinEnrich,
-    "anti_join" -> antiJoin,
-    "cache_upsert" -> cacheUpsert,
-    "distinct_keys" -> distinctKeys,
-    "geo_enrichment" -> geoEnrichment
-  )
-
-  val oracle: Map[String, String] = Map(
-    "entity_resolution" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "entity_resolution" -> Query(entityResolution,
       """WITH RECURSIVE p AS (
         |  SELECT p_partkey, p_name,
         |    split_part(p_name, ' ', 1) AS w1,
@@ -312,8 +294,8 @@ object JoinQueries {
         |  arg_min(p_name, p_partkey) AS canonical_name,
         |  string_agg(CAST(p_partkey AS VARCHAR), ','
         |    ORDER BY p_partkey) AS members
-        |FROM ent GROUP BY entity""".stripMargin,
-    "fuzzy_match" ->
+        |FROM ent GROUP BY entity""".stripMargin),
+    "fuzzy_match" -> Query(fuzzyMatch,
       """WITH p AS (
         |  SELECT p_partkey, p_name,
         |    split_part(p_name, ' ', 1) AS w1,
@@ -328,33 +310,33 @@ object JoinQueries {
         |  CAST(levenshtein(q_noun, noun) AS BIGINT) AS dist
         |FROM q JOIN p ON q_w1 = w1 AND q_partkey <> p_partkey
         |WHERE abs(length(q_noun) - length(noun)) <= 2
-        |  AND levenshtein(q_noun, noun) <= 2""".stripMargin,
-    "bloom_prefilter_join" ->
+        |  AND levenshtein(q_noun, noun) <= 2""".stripMargin),
+    "bloom_prefilter_join" -> Query(bloomPrefilterJoinQ,
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
         |  o_totalprice, o_orderdate
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_totalprice > 480000""".stripMargin,
-    "bucketed_join" ->
+        |WHERE o_totalprice > 480000""".stripMargin),
+    "bucketed_join" -> Query(bucketedJoin,
       """SELECT o_orderkey, o_custkey, o_totalprice, c_name, c_mktsegment
-        |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "salted_join" ->
+        |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin),
+    "salted_join" -> Query(saltedJoin,
       """SELECT o_orderkey, o_custkey, o_totalprice, c_name
-        |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "topk_per_group" ->
+        |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin),
+    "topk_per_group" -> Query(topkPerGroup,
       """SELECT o_custkey, o_orderkey, o_totalprice, CAST(rk AS INT) AS rk FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey DESC) AS rk
-        |  FROM orders) WHERE rk <= 3""".stripMargin,
-    "set_ops" ->
+        |  FROM orders) WHERE rk <= 3""".stripMargin),
+    "set_ops" -> Query(setOps,
       """WITH buyers AS (SELECT user_id FROM events WHERE event_type = 'purchase'),
         |     errorers AS (SELECT user_id FROM events WHERE event_type = 'error')
         |SELECT user_id, 'both' AS tag FROM (SELECT user_id FROM buyers
         |  INTERSECT SELECT user_id FROM errorers)
         |UNION ALL
         |SELECT user_id, 'buy_only' AS tag FROM (SELECT user_id FROM buyers
-        |  EXCEPT SELECT user_id FROM errorers)""".stripMargin,
-    "asof_join_fwd" ->
+        |  EXCEPT SELECT user_id FROM errorers)""".stripMargin),
+    "asof_join_fwd" -> Query(asofJoinFwd,
       """WITH cand AS (
         |  SELECT e.event_id, e.user_id, e.ts,
         |    o.o_orderkey, o.o_totalprice, o.o_orderdate,
@@ -368,12 +350,12 @@ object JoinQueries {
         |SELECT e.event_id, e.user_id, e.ts, NULL, NULL, NULL
         |FROM events e
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = e.user_id AND o.o_orderdate >= e.ts)""".stripMargin,
+        |  WHERE o.o_custkey = e.user_id AND o.o_orderdate >= e.ts)""".stripMargin),
     // nearest: rank ALL the user's orders by |Δt|, then
     // backward-before-forward on distance ties, then the direction's
     // own tie-break (largest key backward, smallest forward) — the
     // exact rule AsOfJoin.asOfNearest implements windowed
-    "asof_join_nearest" ->
+    "asof_join_nearest" -> Query(asofJoinNearest,
       """WITH cand AS (
         |  SELECT e.event_id, e.user_id, e.ts,
         |    o.o_orderkey, o.o_totalprice, o.o_orderdate,
@@ -389,8 +371,8 @@ object JoinQueries {
         |SELECT e.event_id, e.user_id, e.ts, NULL, NULL, NULL
         |FROM events e
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = e.user_id)""".stripMargin,
-    "asof_join" ->
+        |  WHERE o.o_custkey = e.user_id)""".stripMargin),
+    "asof_join" -> Query(asofJoin,
       """WITH cand AS (
         |  SELECT e.event_id, e.user_id, e.ts,
         |    o.o_orderkey, o.o_totalprice, o.o_orderdate,
@@ -404,23 +386,23 @@ object JoinQueries {
         |SELECT e.event_id, e.user_id, e.ts, NULL, NULL, NULL
         |FROM events e
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)""".stripMargin,
-    "join_enrich" ->
+        |  WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)""".stripMargin),
+    "join_enrich" -> Query(joinEnrich,
       """SELECT o_orderkey, o_totalprice, o_orderstatus,
         |  c_name, c_mktsegment, c_acctbal
-        |FROM orders LEFT JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "anti_join" ->
+        |FROM orders LEFT JOIN customer ON o_custkey = c_custkey""".stripMargin),
+    "anti_join" -> Query(antiJoin,
       """SELECT c_custkey, c_name, c_nationkey FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_totalprice > 150000)""".stripMargin,
-    "cache_upsert" ->
+        |                  WHERE o_custkey = c_custkey AND o_totalprice > 150000)""".stripMargin),
+    "cache_upsert" -> Query(cacheUpsert,
       """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_orderdate DESC, o_orderkey % 2 DESC, o_orderkey DESC) AS rn
-        |  FROM orders) WHERE rn = 1""".stripMargin,
-    "distinct_keys" -> "SELECT DISTINCT user_id FROM events",
-    "geo_enrichment" ->
+        |  FROM orders) WHERE rn = 1""".stripMargin),
+    "distinct_keys" -> Query(distinctKeys, "SELECT DISTINCT user_id FROM events"),
+    "geo_enrichment" -> Query(geoEnrichment,
       """WITH oct AS (
         |  SELECT event_id,
         |    user_id % 200 AS b, event_id % 250 AS c, (event_id*7) % 250 AS d
@@ -435,6 +417,6 @@ object JoinQueries {
         |  CASE WHEN d % 97 = 0 THEN NULL ELSE (c % 360) - 180 + 0.25 END AS lon,
         |  CASE WHEN d % 97 = 0 THEN 'Error' ELSE 'ISP-' || (b % 3) END AS isp,
         |  TIMESTAMP '2026-01-01 00:00:00' AS api_fetch_timestamp
-        |FROM oct""".stripMargin
+        |FROM oct""".stripMargin)
   )
 }

@@ -39,16 +39,8 @@ object JourneyQueries {
       userCol = "user_id", tsCol = "ts", idCol = "event_id",
       typeCol = "event_type")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "attribution_touch" -> attributionTouch,
-    "markov_transitions" -> markovTransitions,
-    "ab_test" -> abTest,
-    "dau_wau" -> dauWau,
-    "top_paths" -> topPaths
-  )
-
-  val oracle: Map[String, String] = Map(
-    "attribution_touch" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "attribution_touch" -> Query(attributionTouch,
       """WITH ev AS (
         |  SELECT event_id, user_id, ts, event_type, value,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
@@ -81,8 +73,8 @@ object JourneyQueries {
         |  round(sum(conv_value * (CAST(1 AS DOUBLE) / n)), 3) AS rev_linear
         |FROM ag
         |WHERE is_touch = 1 AND conv_value IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    "markov_transitions" ->
+        |GROUP BY 1""".stripMargin),
+    "markov_transitions" -> Query(markovTransitions,
       """WITH s AS (
         |  SELECT event_type AS src,
         |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
@@ -91,8 +83,8 @@ object JourneyQueries {
         |SELECT src, dst, CAST(count(*) AS BIGINT) AS n,
         |  CAST(count(*) AS DOUBLE) / sum(count(*)) OVER (PARTITION BY src) AS p
         |FROM s WHERE dst IS NOT NULL
-        |GROUP BY src, dst""".stripMargin,
-    "ab_test" ->
+        |GROUP BY src, dst""".stripMargin),
+    "ab_test" -> Query(abTest,
       """WITH u AS (
         |  SELECT user_id,
         |    CASE WHEN substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 1)
@@ -121,8 +113,8 @@ object JourneyQueries {
         |             / (CAST(n_a AS DOUBLE) * n_a * (n_a - 1))
         |         + CAST(n_b * q_b - s_b * s_b AS DOUBLE)
         |             / (CAST(n_b AS DOUBLE) * n_b * (n_b - 1))) AS t_welch
-        |FROM s""".stripMargin,
-    "dau_wau" ->
+        |FROM s""".stripMargin),
+    "dau_wau" -> Query(dauWau,
       """WITH ad AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
         |days AS (SELECT DISTINCT day FROM ad),
         |fan AS (SELECT DISTINCT user_id, CAST(day + INTERVAL (i) DAY AS DATE) AS wday
@@ -131,8 +123,8 @@ object JourneyQueries {
         |        FROM fan JOIN days ON fan.wday = days.day GROUP BY 1),
         |dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau FROM ad GROUP BY 1)
         |SELECT d.day, d.dau, w.wau, CAST(d.dau AS DOUBLE) / w.wau AS stickiness
-        |FROM dau d JOIN wau w ON d.day = w.day""".stripMargin,
-    "top_paths" ->
+        |FROM dau d JOIN wau w ON d.day = w.day""".stripMargin),
+    "top_paths" -> Query(topPaths,
       """WITH r AS (
         |  SELECT user_id, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
@@ -147,6 +139,6 @@ object JourneyQueries {
         |  FROM r WHERE rn <= 5 GROUP BY 1
         |)
         |SELECT path, CAST(count(*) AS BIGINT) AS n_users
-        |FROM p GROUP BY 1 ORDER BY n_users DESC, path LIMIT 20""".stripMargin
+        |FROM p GROUP BY 1 ORDER BY n_users DESC, path LIMIT 20""".stripMargin)
   )
 }

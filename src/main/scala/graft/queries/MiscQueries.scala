@@ -527,42 +527,6 @@ object MiscQueries {
     scanReport.unionByName(ri)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_checks" -> dqChecks,
-    "url_normalize" -> urlNormalize,
-    "zorder_value" -> zorderValue,
-    "hilbert_value" -> hilbertValue,
-    "shard_balance" -> shardBalance,
-    "streaming_shard_balance" -> streamingShardBalance,
-    "format_roundtrip" -> formatRoundtrip,
-    "sample_split" -> sampleSplit,
-    "weighted_sample" -> weightedSample,
-    "profile_columns" -> profileColumns,
-    "cap_per_group" -> capPerGroup,
-    "mixture_sample" -> mixtureSample,
-    "multimodal_features" -> multimodalFeatures,
-    "multimodal_ahash" -> multimodalAhash,
-    "multimodal_jpeg" -> multimodalJpeg,
-    "dedup_image_ahash" -> dedupImageAhash,
-    "streaming_image_dedup" -> streamingImageDedup,
-    "multimodal_resize" -> multimodalResize,
-    "multimodal_frames" -> multimodalFrames,
-    "multimodal_keyframes" -> multimodalKeyframes,
-    "multimodal_patches" -> multimodalPatches,
-    "multimodal_audio_frames" -> multimodalAudioFrames,
-    "streaming_sessions" -> streamingSessions,
-    "streaming_session_ids" -> streamingSessionIds,
-    "streaming_hourly" -> streamingHourly,
-    "streaming_distinct_kmv" -> streamingDistinctKmv,
-    "streaming_heavy_hitters" -> streamingHeavyHitters,
-    "streaming_dedup" -> streamingDedup,
-    "streaming_event_pairs" -> streamingEventPairs,
-    "streaming_incremental_dedup" -> streamingIncrementalDedup,
-    "streaming_dsir" -> streamingDsir,
-    "streaming_geo_cache" -> streamingGeoCache,
-    "streaming_cms" -> streamingCms
-  )
-
   private val t80 = graft.operators.Sampling.fractionThreshold(0.8)
   private val t90 = graft.operators.Sampling.fractionThreshold(0.9)
   private val t25 = graft.operators.Sampling.fractionThreshold(0.25)
@@ -600,8 +564,8 @@ object MiscQueries {
       |      THEN bit * (1::BIGINT << CAST(cell AS INT)) ELSE 0 END) AS BIGINT) AS hash_lo
       |  FROM bits GROUP BY doc_id, w, h)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "dq_checks" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "dq_checks" -> Query(dqChecks,
       """WITH scan AS (
         |  SELECT
         |    count(*) FILTER (event_id IS NULL) AS complete_event_id,
@@ -626,8 +590,8 @@ object MiscQueries {
         |)
         |SELECT check_name, CAST(violations AS BIGINT) AS violations,
         |  violations = 0 AS passed
-        |FROM long""".stripMargin,
-    "url_normalize" ->
+        |FROM long""".stripMargin),
+    "url_normalize" -> Query(urlNormalize,
       """WITH u AS (
         |  SELECT
         |    (CASE WHEN event_id % 2 = 0 THEN 'HTTPS' ELSE 'https' END)
@@ -682,10 +646,10 @@ object MiscQueries {
         |SELECT canonical_url, CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(count(DISTINCT url) AS BIGINT) AS n_variants,
         |  min(url) AS sample_url
-        |FROM canon GROUP BY 1""".stripMargin,
+        |FROM canon GROUP BY 1""".stripMargin),
     // the streaming twin must converge to the batch sketch exactly
-    "streaming_distinct_kmv" -> SketchQueries.oracle("distinct_kmv"),
-    "streaming_cms" ->
+    "streaming_distinct_kmv" -> Query(streamingDistinctKmv, SketchQueries.KmvOracle),
+    "streaming_cms" -> Query(streamingCms,
       """WITH r AS (
         |  SELECT event_type, CAST(user_id AS VARCHAR) AS item
         |  FROM events WHERE user_id IS NOT NULL
@@ -695,9 +659,10 @@ object MiscQueries {
         |    || ':' || item), 1, 15)) AS BIGINT) % 256 AS bucket,
         |  CAST(count(*) AS BIGINT) AS n
         |FROM r, (SELECT unnest([0, 1, 2, 3]) AS j) js
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "streaming_heavy_hitters" -> SketchQueries.oracle("heavy_hitters"),
-    "zorder_value" ->
+        |GROUP BY 1, 2, 3""".stripMargin),
+    "streaming_heavy_hitters" ->
+      Query(streamingHeavyHitters, SketchQueries.HeavyHittersOracle),
+    "zorder_value" -> Query(zorderValue,
       """WITH q AS (
         |  SELECT event_id,
         |    user_id % 65536 AS a,
@@ -723,9 +688,9 @@ object MiscQueries {
         |    (sb3 | (sb3 << 1)) & 1431655765 AS sb4
         |  FROM s3
         |)
-        |SELECT event_id, a, b, sa4 | (sb4 << 1) AS z FROM s4""".stripMargin,
-    "hilbert_value" -> HilbertOracle,
-    "shard_balance" ->
+        |SELECT event_id, a, b, sa4 | (sb4 << 1) AS z FROM s4""".stripMargin),
+    "hilbert_value" -> Query(hilbertValue, HilbertOracle),
+    "shard_balance" -> Query(shardBalance,
       """WITH a AS (
         |  SELECT CAST(concat('0x', substr(md5('shard:' ||
         |      CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 32 AS shard,
@@ -741,31 +706,31 @@ object MiscQueries {
         |    AS rows_share_micro,
         |  CAST((sum_weight * 1000000) // (sum(sum_weight) OVER ()) AS BIGINT)
         |    AS weight_share_micro
-        |FROM g""".stripMargin,
-    "format_roundtrip" ->
+        |FROM g""".stripMargin),
+    "format_roundtrip" -> Query(formatRoundtrip,
       """SELECT doc_id, md5(text) AS text_hash, n_chars,
         |  1 AS jsonl_match, 1 AS avro_match
-        |FROM documents""".stripMargin,
-    "streaming_shard_balance" ->
+        |FROM documents""".stripMargin),
+    "streaming_shard_balance" -> Query(streamingShardBalance,
       """SELECT CAST(concat('0x', substr(md5('shard:' ||
         |    CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 32 AS shard,
         |  CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_weight
-        |FROM documents GROUP BY 1""".stripMargin,
-    "sample_split" ->
+        |FROM documents GROUP BY 1""".stripMargin),
+    "sample_split" -> Query(sampleSplit,
       s"""SELECT event_id, user_id,
          |  CASE WHEN md5('split:' || CAST(event_id AS VARCHAR)) < '$t80' THEN 'train'
          |       WHEN md5('split:' || CAST(event_id AS VARCHAR)) < '$t90' THEN 'val'
          |       ELSE 'test' END AS split,
          |  md5('sample:' || CAST(event_id AS VARCHAR)) < '$t25' AS in_quarter_sample
-         |FROM events""".stripMargin,
-    "weighted_sample" ->
+         |FROM events""".stripMargin),
+    "weighted_sample" -> Query(weightedSample,
       """SELECT event_id, user_id, value
         |FROM events
         |WHERE CAST(concat('0x',
         |    substr(md5('wsamp:' || CAST(event_id AS VARCHAR)), 1, 15)) AS BIGINT)::DOUBLE
-        |  / 1152921504606846976.0 < value / 40.0""".stripMargin,
-    "profile_columns" -> {
+        |  / 1152921504606846976.0 < value / 40.0""".stripMargin),
+    "profile_columns" -> Query(profileColumns, {
       def one(c: String, numeric: Boolean): String = {
         val mn = if (numeric) s"CAST(CAST(min($c) AS DECIMAL(28,6)) AS VARCHAR)"
                  else s"CAST(min($c) AS VARCHAR)"
@@ -782,13 +747,13 @@ object MiscQueries {
         one("o_orderstatus", false), one("o_totalprice", true),
         one("o_orderdate", false), one("o_orderpriority", false))
         .mkString("\nUNION ALL\n")
-    },
-    "streaming_event_pairs" ->
+    }),
+    "streaming_event_pairs" -> Query(streamingEventPairs,
       """SELECT a.event_id AS a_id, b.event_id AS b_id, a.user_id
         |FROM events a JOIN events b ON a.user_id = b.user_id
         | AND epoch_us(b.ts) > epoch_us(a.ts)
-        | AND epoch_us(b.ts) <= epoch_us(a.ts) + 300000000""".stripMargin,
-    "streaming_dsir" ->
+        | AND epoch_us(b.ts) <= epoch_us(a.ts) + 300000000""".stripMargin),
+    "streaming_dsir" -> Query(streamingDsir,
       s"""WITH m AS (SELECT doc_id,
          |    md5('dsir:' || CAST(doc_id AS VARCHAR))
          |      < '${graft.operators.Sampling.fractionThreshold(0.8)}'
@@ -820,8 +785,8 @@ object MiscQueries {
          |SELECT sc.doc_id, sc.n_grams, sc.dsir_lr,
          |  CAST(sc.dsir_lr AS HUGEINT) * tot.traw
          |    > CAST(sc.n_grams AS HUGEINT) * tot.tlr AS selected
-         |FROM sc CROSS JOIN tot""".stripMargin,
-    "streaming_incremental_dedup" ->
+         |FROM sc CROSS JOIN tot""".stripMargin),
+    "streaming_incremental_dedup" -> Query(streamingIncrementalDedup,
       s"""WITH shr AS (SELECT doc_id, unnest(list_distinct(list_transform(
          |    generate_series(1, len(words) - 2),
          |    i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))) AS sh
@@ -837,8 +802,8 @@ object MiscQueries {
          |FROM bands f JOIN m mf ON f.doc_id = mf.doc_id AND NOT mf.is_base
          |JOIN bands b ON f.band_idx = b.band_idx AND f.band_hash = b.band_hash
          |JOIN m mb ON b.doc_id = mb.doc_id AND mb.is_base
-         |GROUP BY f.doc_id""".stripMargin,
-    "mixture_sample" ->
+         |GROUP BY f.doc_id""".stripMargin),
+    "mixture_sample" -> Query(mixtureSample,
       """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
         |        CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS w
         |      FROM documents GROUP BY source),
@@ -854,12 +819,12 @@ object MiscQueries {
         |FROM documents d JOIN f ON d.source = f.source
         |WHERE CAST(concat('0x',
         |    substr(md5('mix:' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)::DOUBLE
-        |  / 1152921504606846976.0 < f.fr""".stripMargin,
-    "cap_per_group" ->
+        |  / 1152921504606846976.0 < f.fr""".stripMargin),
+    "cap_per_group" -> Query(capPerGroup,
       """SELECT doc_id, lang FROM (
         |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
         |    ORDER BY md5('cap:' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents) WHERE rn <= 20""".stripMargin,
+        |  FROM documents) WHERE rn <= 20""".stripMargin),
     // Mirrors Multimodal.synthesizePayload in closed form: pixel byte
     // i = (i+id)%256 and sample k = ((k+id)%2001)-1000 are arithmetic
     // progressions mod a period, so sums/min/max over any length have
@@ -870,7 +835,7 @@ object MiscQueries {
     // sample k of audio id is ((k + id) % 2001) - 1000, ns = 500+id%300
     // (Multimodal.synthesizePayload); the oracle materializes each
     // 256-sample frame from that formula.
-    "multimodal_audio_frames" ->
+    "multimodal_audio_frames" -> Query(multimodalAudioFrames,
       """WITH p AS (SELECT doc_id, CAST(500 + doc_id % 300 AS BIGINT) AS ns
         |  FROM documents WHERE doc_id % 3 = 1),
         |f AS (SELECT doc_id, ns,
@@ -882,32 +847,32 @@ object MiscQueries {
         |  CAST(list_sum(list_transform(generate_series(0, 255), k ->
         |    (((frame_idx*256 + k + doc_id) % 2001) - 1000)
         |    * (((frame_idx*256 + k + doc_id) % 2001) - 1000))) AS BIGINT) AS frame_sumsq
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin),
     // pixel byte i of image id is (i + id) % 256 with i = 3*(y*iw+x)+c
     // (Multimodal.synthesizePayload); the oracle materializes each
     // patch's 192 byte values from that formula and aggregates them.
-    "multimodal_ahash" ->
+    "multimodal_ahash" -> Query(multimodalAhash,
       s"""WITH $ahashCtes
          |SELECT doc_id AS media_id, CAST(w AS INT) AS width,
          |  CAST(h AS INT) AS height, hash_hi, hash_lo
-         |FROM hs""".stripMargin,
-    "dedup_image_ahash" ->
+         |FROM hs""".stripMargin),
+    "dedup_image_ahash" -> Query(dedupImageAhash,
       s"""WITH $ahashCtes
          |SELECT id_a, id_b, hamming FROM (
          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |    CAST(bit_count(xor(a.hash_lo::BIT, b.hash_lo::BIT))
          |      + bit_count(xor(a.hash_hi::BIT, b.hash_hi::BIT)) AS BIGINT) AS hamming
          |  FROM hs a JOIN hs b ON b.doc_id > a.doc_id)
-         |WHERE hamming <= 3""".stripMargin,
-    "streaming_image_dedup" ->
+         |WHERE hamming <= 3""".stripMargin),
+    "streaming_image_dedup" -> Query(streamingImageDedup,
       s"""WITH $ahashCtes
          |SELECT f.doc_id AS media_id, min(b.doc_id) AS dup_of
          |FROM hs f JOIN hs b
          |  ON f.doc_id % 2 = 1 AND b.doc_id % 2 = 0
          | AND bit_count(xor(f.hash_lo::BIT, b.hash_lo::BIT))
          |   + bit_count(xor(f.hash_hi::BIT, b.hash_hi::BIT)) <= 3
-         |GROUP BY f.doc_id""".stripMargin,
-    "multimodal_patches" ->
+         |GROUP BY f.doc_id""".stripMargin),
+    "multimodal_patches" -> Query(multimodalPatches,
       """WITH p AS (SELECT doc_id, CAST(16 + (doc_id % 8) * 4 AS BIGINT) AS iw,
         |    CAST(12 + (doc_id % 5) * 4 AS BIGINT) AS ih
         |  FROM documents WHERE doc_id % 3 = 0),
@@ -926,8 +891,8 @@ object MiscQueries {
         |  CAST(list_max(flatten(list_transform(generate_series(0, 7), dy ->
         |    list_transform(generate_series(0, 23), k ->
         |      (3*((py*8+dy)*iw + px*8) + k + doc_id) % 256)))) AS INT) AS max_byte
-        |FROM gxy""".stripMargin,
-    "multimodal_jpeg" ->
+        |FROM gxy""".stripMargin),
+    "multimodal_jpeg" -> Query(multimodalJpeg,
       """WITH ids AS (SELECT doc_id, 16 + (doc_id % 8) * 4 AS iw,
         |    12 + (doc_id % 5) * 4 AS ih
         |  FROM documents WHERE doc_id < 40),
@@ -947,8 +912,8 @@ object MiscQueries {
         |  CAST(f.px_sum AS BIGINT), CAST(f.px_min AS INT),
         |  CAST(f.px_max AS INT)
         |FROM read_csv('/root/repo/tools/jpeg_golden.csv', header=true) f
-        |JOIN ids d ON d.doc_id = f.media_id""".stripMargin,
-    "multimodal_features" ->
+        |JOIN ids d ON d.doc_id = f.media_id""".stripMargin),
+    "multimodal_features" -> Query(multimodalFeatures,
       """WITH p AS (SELECT doc_id, doc_id % 3 AS m3,
         |    16 + (doc_id % 8) * 4 AS iw, 12 + (doc_id % 5) * 4 AS ih,
         |    CAST(8000 + (doc_id % 3) * 4000 AS INT) AS rate,
@@ -998,8 +963,8 @@ object MiscQueries {
         |  CAST(CASE WHEN a + n > 256 THEN 0 ELSE a END AS INT),
         |  CAST(CASE WHEN a + n >= 256 THEN 255 ELSE a + n - 1 END AS INT),
         |  NULL, NULL, NULL, NULL, CAST(nf AS INT)
-        |FROM vid""".stripMargin,
-    "streaming_sessions" ->
+        |FROM vid""".stripMargin),
+    "streaming_sessions" -> Query(streamingSessions,
       """WITH d AS (
         |  SELECT user_id, ts,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
@@ -1011,8 +976,8 @@ object MiscQueries {
         |SELECT user_id, min(ts) AS session_start,
         |  max(ts) + INTERVAL 30 MINUTE AS session_end,
         |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM s GROUP BY user_id, sn""".stripMargin,
-    "streaming_session_ids" ->
+        |FROM s GROUP BY user_id, sn""".stripMargin),
+    "streaming_session_ids" -> Query(streamingSessionIds,
       """WITH d AS (
         |  SELECT event_id, user_id, ts,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
@@ -1023,11 +988,11 @@ object MiscQueries {
         |        ROWS UNBOUNDED PRECEDING) AS sn FROM d)
         |SELECT event_id, user_id, ts,
         |  user_id || '_s' || sn AS session_id
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin),
     // Nearest-neighbor oracle: enumerate the 24×18×3 output lattice,
     // map each cell to its floor-rule source index, evaluate the pixel
     // formula there — a resample-indexing bug in the engine diverges.
-    "multimodal_resize" ->
+    "multimodal_resize" -> Query(multimodalResize,
       """WITH p AS (SELECT doc_id, 16 + (doc_id % 8) * 4 AS iw,
         |    12 + (doc_id % 5) * 4 AS ih
         |  FROM documents WHERE doc_id % 3 = 0),
@@ -1043,11 +1008,11 @@ object MiscQueries {
         |  CAST(sum((si + doc_id) % 256) AS BIGINT) AS px_sum,
         |  CAST(min((si + doc_id) % 256) AS INT) AS px_min,
         |  CAST(max((si + doc_id) % 256) AS INT) AS px_max
-        |FROM g GROUP BY doc_id, iw, ih""".stripMargin,
+        |FROM g GROUP BY doc_id, iw, ih""".stripMargin),
     // Frame f of video id covers global bytes [f·192, (f+1)·192) whose
     // values are the consecutive residues starting at (id + f·192) %
     // 256 — closed-form sum/min/max per sampled frame.
-    "multimodal_frames" ->
+    "multimodal_frames" -> Query(multimodalFrames,
       """WITH p AS (SELECT doc_id, CAST(4 + doc_id % 12 AS INT) AS nf
         |  FROM documents WHERE doc_id % 3 = 2),
         |f AS (SELECT doc_id,
@@ -1058,8 +1023,8 @@ object MiscQueries {
         |    ELSE (256-a)*(a+255)//2 + (a-64)*(a-65)//2 END AS BIGINT) AS frame_sum,
         |  CAST(CASE WHEN a > 64 THEN 0 ELSE a END AS INT) AS frame_min,
         |  CAST(CASE WHEN a >= 64 THEN 255 ELSE a + 191 END AS INT) AS frame_max
-        |FROM s""".stripMargin,
-    "multimodal_keyframes" ->
+        |FROM s""".stripMargin),
+    "multimodal_keyframes" -> Query(multimodalKeyframes,
       """WITH p AS (SELECT doc_id, CAST(4 + doc_id % 12 AS INT) AS nf
         |  FROM documents WHERE doc_id % 3 = 2),
         |f AS (SELECT doc_id,
@@ -1078,10 +1043,10 @@ object MiscQueries {
         |  FROM d WHERE delta_abs IS NOT NULL)
         |SELECT media_id, frame_idx, frame_sum,
         |  CAST(delta_abs AS BIGINT) AS delta_abs, CAST(rn AS BIGINT) AS key_rank
-        |FROM r WHERE rn <= 2""".stripMargin,
-    "streaming_dedup" ->
-      "SELECT DISTINCT md5(text) AS text_hash FROM documents",
-    "streaming_geo_cache" ->
+        |FROM r WHERE rn <= 2""".stripMargin),
+    "streaming_dedup" -> Query(streamingDedup,
+      "SELECT DISTINCT md5(text) AS text_hash FROM documents"),
+    "streaming_geo_cache" -> Query(streamingGeoCache,
       """SELECT DISTINCT
         |  '10.' || b || '.' || c || '.' || d AS client_ip,
         |  CASE WHEN d % 97 = 0 THEN 'Error' ELSE 'C' || (d % 5) END AS countryCode,
@@ -1093,12 +1058,12 @@ object MiscQueries {
         |  CASE WHEN d % 97 = 0 THEN 'Error' ELSE 'ISP-' || (b % 3) END AS isp,
         |  TIMESTAMP '2026-01-01 00:00:00' AS api_fetch_timestamp
         |FROM (SELECT user_id % 200 AS b, event_id % 250 AS c,
-        |        (event_id*7) % 250 AS d FROM events)""".stripMargin,
-    "streaming_hourly" ->
+        |        (event_id*7) % 250 AS d FROM events)""".stripMargin),
+    "streaming_hourly" -> Query(streamingHourly,
       """SELECT date_trunc('hour', ts) AS hour_start, event_type,
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  round(sum(value), 3) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin
+        |FROM events GROUP BY 1, 2""".stripMargin)
   )
 
   /** Generated 16-round Hilbert xy→d unroll: one CTE per bit level —

@@ -153,13 +153,6 @@ object PipelineQueries {
         .foreach(java.nio.file.Files.deleteIfExists(_))
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "elb_hourly_geo" -> hourlyGeo,
-    "elb_error_summary" -> errorSummary,
-    "elb_bot_origin" -> botOrigin,
-    "elb_pipeline" -> elbPipeline
-  )
-
   /** Shared oracle CTE: the enriched frame, re-derived from events. */
   private val baseCte: String =
     s"""WITH base AS (
@@ -194,8 +187,8 @@ object PipelineQueries {
   private def baseCteAnd(extra: String): String =
     baseCte.replace("AND event_id % 6 <> 4", s"AND event_id % 6 <> 4 AND $extra")
 
-  val oracle: Map[String, String] = Map(
-    "elb_hourly_geo" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "elb_hourly_geo" -> Query(hourlyGeo,
       s"""$baseCte
          |SELECT year(e) AS request_year, month(e) AS request_month,
          |  day(e) AS request_day, hour(e) AS request_hour, countryName, city,
@@ -208,8 +201,8 @@ object PipelineQueries {
          |  count(*) FILTER (sct = '2xx_Success') AS count_2xx,
          |  count(*) FILTER (sct = '4xx_ClientError') AS count_4xx,
          |  count(*) FILTER (sct = '5xx_ServerError') AS count_5xx
-         |FROM base GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin,
-    "elb_error_summary" ->
+         |FROM base GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin),
+    "elb_error_summary" -> Query(errorSummary,
       s"""$baseCte
          |SELECT ts AS time, client_ip, city, countryName, isp,
          |  CASE WHEN event_id % 5 = 0 THEN 'POST' ELSE 'GET' END AS http_method,
@@ -233,13 +226,13 @@ object PipelineQueries {
          |  CASE event_id % 6 WHEN 0 THEN 'Windows' WHEN 1 THEN 'Mac OS X'
          |    WHEN 2 THEN 'Linux' ELSE 'Other' END AS ua_os_family,
          |  '-' AS error_reason
-         |FROM base WHERE sct IN ('4xx_ClientError', '5xx_ServerError')""".stripMargin,
-    "elb_bot_origin" ->
+         |FROM base WHERE sct IN ('4xx_ClientError', '5xx_ServerError')""".stripMargin),
+    "elb_bot_origin" -> Query(botOrigin,
       s"""$baseCte
          |SELECT countryName, isp,
          |  CAST(count(*) AS BIGINT) AS bot_request_count
          |FROM base WHERE event_id % 6 = 3
-         |GROUP BY 1, 2""".stripMargin,
+         |GROUP BY 1, 2""".stripMargin),
     // Whole-DAG derivation: base (parse+enrich+filter) → session
     // windows → rolling range windows, all re-derived from events.
     // Session ORDER BY carries event_id as the oracle-side tie-break
@@ -247,7 +240,7 @@ object PipelineQueries {
     // session_number/session_id are invariant to tie order, and the
     // rolling range frames mirror the pandas (t−Δ, t] edge exactly as
     // the rolling_window oracle does.
-    "elb_pipeline" ->
+    "elb_pipeline" -> Query(elbPipeline,
       s"""${baseCteAnd(PipelineSubset)},
          |sess AS (
          |  SELECT *,
@@ -280,6 +273,6 @@ object PipelineQueries {
          |  w5 AS (PARTITION BY client_ip ORDER BY epoch_us(ts)
          |    RANGE BETWEEN 299999999 PRECEDING AND CURRENT ROW),
          |  w1 AS (PARTITION BY client_ip ORDER BY epoch_us(ts)
-         |    RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)""".stripMargin
+         |    RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)""".stripMargin)
   )
 }

@@ -132,20 +132,8 @@ object PrivacyQueries {
       catCols = Seq("c_nationkey", "c_mktsegment"),
       salt = "graft-pii-r9", bandWidth = 1000, k = 10)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_normalize" -> textNormalize,
-    "dedup_boilerplate" -> dedupBoilerplate,
-    "k_anonymity" -> kAnonymity,
-    "l_diversity" -> lDiversity,
-    "t_closeness" -> tCloseness,
-    "dp_noisy_count" -> dpNoisyCount,
-    "dp_quantile" -> dpQuantile,
-    "streaming_dp_count" -> streamingDpCount,
-    "pii_anonymize" -> piiAnonymize
-  )
-
-  val oracle: Map[String, String] = Map(
-    "text_normalize" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "text_normalize" -> Query(textNormalize,
       s"""SELECT doc_id,
         |  trim(regexp_replace(
         |    lower(nfc_normalize(text || '$MessyTail')),
@@ -153,8 +141,8 @@ object PrivacyQueries {
         |  CAST(length(trim(regexp_replace(
         |    lower(nfc_normalize(text || '$MessyTail')),
         |    '\\s+', ' ', 'g'))) AS BIGINT) AS n_chars_norm
-        |FROM documents""".stripMargin,
-    "dedup_boilerplate" ->
+        |FROM documents""".stripMargin),
+    "dedup_boilerplate" -> Query(dedupBoilerplate,
       """WITH d AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
         |), ch AS (
@@ -172,8 +160,8 @@ object PrivacyQueries {
         |  CAST(coalesce(count(*) FILTER (WHERE chunk_df >= 2), 0) AS BIGINT)
         |    AS chunks_dropped
         |FROM ch JOIN f ON md5(ch.chunk) = f.h
-        |GROUP BY 1""".stripMargin,
-    "k_anonymity" ->
+        |GROUP BY 1""".stripMargin),
+    "k_anonymity" -> Query(kAnonymity,
       """WITH classes AS (
         |  SELECT c_nationkey, c_mktsegment, floor(c_acctbal / 1000) AS bal_band,
         |    count(*) AS class_size
@@ -182,8 +170,8 @@ object PrivacyQueries {
         |SELECT class_size AS k, CAST(count(*) AS BIGINT) AS n_classes,
         |  CAST(sum(class_size) AS BIGINT) AS n_rows,
         |  CAST(class_size >= 5 AS INT) AS anonymous
-        |FROM classes GROUP BY 1""".stripMargin,
-    "l_diversity" ->
+        |FROM classes GROUP BY 1""".stripMargin),
+    "l_diversity" -> Query(lDiversity,
       """WITH classes AS (
         |  SELECT c_nationkey, c_mktsegment, floor(c_acctbal / 1000) AS bal_band,
         |    count(DISTINCT c_acctbal) AS l_distinct, count(*) AS class_size
@@ -193,8 +181,8 @@ object PrivacyQueries {
         |  CAST(count(*) AS BIGINT) AS n_classes,
         |  CAST(sum(class_size) AS BIGINT) AS n_rows,
         |  CAST(l_distinct >= 3 AS INT) AS diverse
-        |FROM classes GROUP BY l_distinct""".stripMargin,
-    "t_closeness" ->
+        |FROM classes GROUP BY l_distinct""".stripMargin),
+    "t_closeness" -> Query(tCloseness,
       """WITH cell AS (
         |  SELECT c_nationkey, c_mktsegment,
         |    CAST(floor(c_acctbal / 1000) AS BIGINT) AS sv, count(*) AS cnt
@@ -225,9 +213,9 @@ object PrivacyQueries {
         |       ELSE 0 END AS BIGINT) AS emd_micro,
         |  CAST(CASE WHEN count(*) > 1 THEN sum(t) // (count(*) - 1)
         |       ELSE 0 END <= 200000 AS INT) AS t_close
-        |FROM term GROUP BY 1, 2, 3""".stripMargin,
-    "dp_noisy_count" -> DpCountOracle,
-    "dp_quantile" ->
+        |FROM term GROUP BY 1, 2, 3""".stripMargin),
+    "dp_noisy_count" -> Query(dpNoisyCount, DpCountOracle),
+    "dp_quantile" -> Query(dpQuantile,
       """WITH vals AS (
         |  SELECT CAST(floor(c_acctbal / 1000) AS BIGINT) AS v, count(*) AS c
         |  FROM customer GROUP BY 1
@@ -252,9 +240,9 @@ object PrivacyQueries {
         |SELECT v AS value, CAST(n AS BIGINT) AS n_total,
         |  CAST(u2 AS BIGINT) AS utility_scaled,
         |  CAST(2 * u2 + 2 * gg AS BIGINT) AS score
-        |FROM g ORDER BY score DESC, r, v LIMIT 1""".stripMargin,
-    "streaming_dp_count" -> DpCountOracle,
-    "pii_anonymize" ->
+        |FROM g ORDER BY score DESC, r, v LIMIT 1""".stripMargin),
+    "streaming_dp_count" -> Query(streamingDpCount, DpCountOracle),
+    "pii_anonymize" -> Query(piiAnonymize,
       """WITH s AS (
         |  SELECT *, count(*) OVER (PARTITION BY c_nationkey, c_mktsegment)
         |    AS class_size
@@ -266,7 +254,7 @@ object PrivacyQueries {
         |  CAST(class_size AS BIGINT) AS class_size,
         |  CASE WHEN class_size >= 10 THEN c_nationkey END AS c_nationkey,
         |  CASE WHEN class_size >= 10 THEN c_mktsegment END AS c_mktsegment
-        |FROM s""".stripMargin
+        |FROM s""".stripMargin)
   )
 
   private lazy val DpCountOracle =

@@ -71,13 +71,6 @@ object RobustQueries {
       keyCol = "event_type", valueCol = "cents", tieCol = "event_id",
       factor = 5L)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "weighted_median" -> weightedMedian,
-    "winsorized_stats" -> winsorizedStats,
-    "mad_outliers" -> madOutliers,
-    "skyline_pareto" -> skylinePareto
-  )
-
   private val MadOracle =
     """WITH c AS (
       |  SELECT event_id, event_type,
@@ -106,9 +99,9 @@ object RobustQueries {
       |FROM d JOIN m2 USING (event_type)
       |WHERE d.abs_dev > 5 * m2.mad""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "mad_outliers" -> MadOracle,
-    "weighted_median" ->
+  val entries: Seq[(String, Query)] = Seq(
+    "mad_outliers" -> Query(madOutliers, MadOracle),
+    "weighted_median" -> Query(weightedMedian,
       """WITH c AS (
         |  SELECT l_returnflag AS flag, l_orderkey, l_linenumber,
         |    CAST(CAST(l_extendedprice AS DECIMAL(14,2)) * 100 AS BIGINT) AS cents,
@@ -125,8 +118,8 @@ object RobustQueries {
         |  CAST(min(CASE WHEN 2 * cw >= tw THEN cents END) AS BIGINT) AS med_cents,
         |  CAST(min(CASE WHEN 2 * cw >= tw THEN cents END) AS DOUBLE) / 100 AS w_median,
         |  CAST(max(tw) AS BIGINT) AS total_w
-        |FROM win GROUP BY 1""".stripMargin,
-    "winsorized_stats" ->
+        |FROM win GROUP BY 1""".stripMargin),
+    "winsorized_stats" -> Query(winsorizedStats,
       """WITH c AS (
         |  SELECT event_type, event_id,
         |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
@@ -148,8 +141,8 @@ object RobustQueries {
         |  CASE WHEN max(n) > 2 * max(k) THEN
         |    CAST(sum(CASE WHEN rn BETWEEN k + 1 AND n - k THEN x END) AS DOUBLE)
         |      / (100 * (max(n) - 2 * max(k))) END AS trim_mean
-        |FROM kk GROUP BY 1""".stripMargin,
-    "skyline_pareto" ->
+        |FROM kk GROUP BY 1""".stripMargin),
+    "skyline_pareto" -> Query(skylinePareto,
       """WITH c AS (
         |  SELECT o_custkey,
         |    sum(CAST(CAST(o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT)) AS spend,
@@ -164,6 +157,6 @@ object RobustQueries {
         |  WHERE b.spend >= a.spend AND b.n_orders >= a.n_orders
         |    AND b.last_order >= a.last_order
         |    AND (b.spend > a.spend OR b.n_orders > a.n_orders
-        |         OR b.last_order > a.last_order))""".stripMargin
+        |         OR b.last_order > a.last_order))""".stripMargin)
   )
 }

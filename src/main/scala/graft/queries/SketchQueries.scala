@@ -115,19 +115,6 @@ object SketchQueries {
         Seq("event_type"), "value", KllK, QPercents),
       "graft_stream_kll")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "decayed_topk" -> decayedTopk,
-    "distinct_kmv" -> distinctKmv,
-    "distinct_hll" -> distinctHll,
-    "quantile_kll" -> quantileKll,
-    "streaming_quantile_kll" -> streamingQuantileKll,
-    "quantile_hist" -> quantileHist,
-    "heavy_hitters" -> heavyHitters,
-    "kmv_set_algebra" -> kmvSetAlgebra,
-    "cms_freq" -> cmsFreq,
-    "join_skew_probe" -> joinSkewProbe
-  )
-
   // The double constants are interpolated from the SAME Scala values the
   // engine uses (shortest round-trip repr), so both engines parse the
   // identical IEEE double.
@@ -149,10 +136,37 @@ object SketchQueries {
   private val hllNumer =
     Sketches.hllAlpha(1 << HllP) * (1 << HllP) * (1 << HllP) * (1L << 33).toDouble
 
-  val oracle: Map[String, String] = Map(
+  // the batch sketches' oracles, shared with their streaming twins in
+  // MiscQueries
+  private[queries] val KmvOracle: String =
+    s"""WITH hs AS (
+       |  SELECT DISTINCT event_type,
+       |    CAST(concat('0x', substr(md5('kmv:' || CAST(user_id AS VARCHAR)), 1, 15))
+       |      AS BIGINT) AS h
+       |  FROM events
+       |), r AS (
+       |  SELECT event_type, h,
+       |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
+       |  FROM hs
+       |)
+       |SELECT event_type,
+       |  CAST(count(*) AS BIGINT) AS n_kept,
+       |  max(h) AS kth_hash,
+       |  round(CASE WHEN count(*) < $KmvK THEN CAST(count(*) AS DOUBLE)
+       |        ELSE $kmvNumer / CAST(max(h) AS DOUBLE) END, 3) AS est_distinct
+       |FROM r WHERE rn <= $KmvK GROUP BY event_type""".stripMargin
+
+  private[queries] val HeavyHittersOracle: String =
+    s"""SELECT event_type, CAST(user_id AS VARCHAR) AS item,
+       |  CAST(count(*) AS BIGINT) AS est
+       |FROM events
+       |GROUP BY event_type, user_id
+       |HAVING count(*) >= $HhMin""".stripMargin
+
+  val entries: Seq[(String, Query)] = Seq(
     // exact-regime Space-Saving == plain GROUP BY counts (capacity
     // exceeds both sides' distinct keys at every oracle SF)
-    "join_skew_probe" ->
+    "join_skew_probe" -> Query(joinSkewProbe,
       s"""WITH a AS (SELECT CAST(user_id AS VARCHAR) AS key,
          |             CAST(count(*) AS BIGINT) AS cnt_a
          |           FROM events GROUP BY 1),
@@ -162,25 +176,9 @@ object SketchQueries {
          |SELECT key, cnt_a, cnt_b,
          |  CAST(cnt_a * cnt_b AS BIGINT) AS fanout
          |FROM a JOIN b USING (key)
-         |ORDER BY fanout DESC, key ASC LIMIT $SkewTopN""".stripMargin,
-    "distinct_kmv" ->
-      s"""WITH hs AS (
-         |  SELECT DISTINCT event_type,
-         |    CAST(concat('0x', substr(md5('kmv:' || CAST(user_id AS VARCHAR)), 1, 15))
-         |      AS BIGINT) AS h
-         |  FROM events
-         |), r AS (
-         |  SELECT event_type, h,
-         |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-         |  FROM hs
-         |)
-         |SELECT event_type,
-         |  CAST(count(*) AS BIGINT) AS n_kept,
-         |  max(h) AS kth_hash,
-         |  round(CASE WHEN count(*) < $KmvK THEN CAST(count(*) AS DOUBLE)
-         |        ELSE $kmvNumer / CAST(max(h) AS DOUBLE) END, 3) AS est_distinct
-         |FROM r WHERE rn <= $KmvK GROUP BY event_type""".stripMargin,
-    "distinct_hll" ->
+         |ORDER BY fanout DESC, key ASC LIMIT $SkewTopN""".stripMargin),
+    "distinct_kmv" -> Query(distinctKmv, KmvOracle),
+    "distinct_hll" -> Query(distinctHll,
       s"""WITH b AS (
          |  SELECT event_type,
          |    CAST(concat('0x', substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 15))
@@ -209,12 +207,12 @@ object SketchQueries {
          |         AND ${1 << HllP} - n_registers > 0
          |    THEN $hllLinList[CAST(${1 << HllP} - n_registers AS INT)]
          |    ELSE $hllNumer / CAST(sum_scaled AS DOUBLE) END, 3) AS est_corrected
-         |FROM agg""".stripMargin,
+         |FROM agg""".stripMargin),
     // exact rank selection — valid because the oracle SF sits in the
     // sketch's exact-under-fill regime (2k values/group vs k = 16384)
-    "quantile_kll" -> kllOracle,
-    "streaming_quantile_kll" -> kllOracle,
-    "quantile_hist" ->
+    "quantile_kll" -> Query(quantileKll, kllOracle),
+    "streaming_quantile_kll" -> Query(streamingQuantileKll, kllOracle),
+    "quantile_hist" -> Query(quantileHist,
       s"""WITH c AS (
          |  SELECT event_type,
          |    least(${QBins - 1}, greatest(0,
@@ -235,8 +233,8 @@ object SketchQueries {
          |  CAST(cum AS BIGINT) AS rank_cum, CAST(total AS BIGINT) AS total
          |FROM cc, (SELECT unnest([${QPercents.mkString(", ")}]) AS p) ps
          |WHERE cum >= (total * p + 99) // 100
-         |  AND cum - n < (total * p + 99) // 100""".stripMargin,
-    "kmv_set_algebra" -> {
+         |  AND cum - n < (total * p + 99) // 100""".stripMargin),
+    "kmv_set_algebra" -> Query(kmvSetAlgebra, {
       val numer = (SetK - 1).toDouble * (1L << 60).toDouble
       s"""WITH ha AS (
          |  SELECT DISTINCT CAST(concat('0x',
@@ -261,8 +259,8 @@ object SketchQueries {
          |  round(ue, 3) AS union_est, round(je, 6) AS jaccard_est,
          |  round(je * ue, 3) AS inter_est
          |FROM raw""".stripMargin
-    },
-    "cms_freq" -> {
+    }),
+    "cms_freq" -> Query(cmsFreq, {
       val js = (0 until CmsDepth).mkString(", ")
       s"""WITH r AS (
          |  SELECT event_type, CAST(user_id AS VARCHAR) AS item
@@ -290,8 +288,8 @@ object SketchQueries {
          |SELECT event_type, item, true_cnt, cms_est,
          |  cms_est - true_cnt AS over_by
          |FROM est""".stripMargin
-    },
-    "decayed_topk" ->
+    }),
+    "decayed_topk" -> Query(decayedTopk,
       """WITH cell AS (
         |  SELECT user_id AS k, CAST(ts AS DATE) AS d, count(*) AS c
         |  FROM events GROUP BY 1, 2
@@ -305,15 +303,10 @@ object SketchQueries {
         |SELECT k AS key, CAST(sum(w) AS BIGINT) AS decayed_micro,
         |  CAST(sum(c) AS BIGINT) AS raw_count
         |FROM w GROUP BY 1
-        |ORDER BY decayed_micro DESC, key LIMIT 20""".stripMargin,
+        |ORDER BY decayed_micro DESC, key LIMIT 20""".stripMargin),
     // capacity ≥ distinct users per group at this SF ⇒ the sketch never
     // truncates and its counters equal the exact GROUP BY counts.
-    "heavy_hitters" ->
-      s"""SELECT event_type, CAST(user_id AS VARCHAR) AS item,
-         |  CAST(count(*) AS BIGINT) AS est
-         |FROM events
-         |GROUP BY event_type, user_id
-         |HAVING count(*) >= $HhMin""".stripMargin
+    "heavy_hitters" -> Query(heavyHitters, HeavyHittersOracle)
   )
 
   /** The linear-counting table as a DuckDB list literal — the SAME

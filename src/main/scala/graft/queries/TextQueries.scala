@@ -321,34 +321,6 @@ object TextQueries {
         col("content"), col("n_words").cast("bigint").as("n_words"),
         col("n_chars"), col("link_chars"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "html_extract" -> htmlExtract,
-    "dsir_select" -> dsirSelect,
-    "dsir_resample" -> dsirResample,
-    "quality_filter_gopher" -> qualityFilterGopher,
-    "quality_filter_linear" -> qualityFilterLinear,
-    "token_budget_sample" -> tokenBudgetSample,
-    "curriculum_order" -> curriculumOrder,
-    "text_lm_score" -> textLmScore,
-    "phrase_search" -> phraseSearch,
-    "tokenize_pack" -> tokenizePack,
-    "bpe_train" -> bpeTrain,
-    "bpe_token_count" -> bpeTokenCount,
-    "tfidf_topk" -> tfidfTopk,
-    "bm25_topk" -> bm25Topk,
-    "inverted_index" -> invertedIndex,
-    "text_repetition" -> textRepetition,
-    "doc_length_stats" -> docLengthStats,
-    "vocab_topk" -> vocabTopk,
-    "vocab_coverage" -> vocabCoverage,
-    "sql_vocab_topk" -> sqlVocabTopk,
-    "text_stats" -> textStats,
-    "text_langid" -> textLangid,
-    "text_quality" -> textQuality,
-    "text_fingerprint" -> textFingerprint,
-    "text_pii_redact" -> textPiiRedact
-  )
-
   // -- oracle SQL ------------------------------------------------------
 
   private def hits(lang: String): String = {
@@ -488,11 +460,11 @@ object TextQueries {
        |    - start_offset // 512 + 1 AS BIGINT) AS n_packs
        |FROM c""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val entries: Seq[(String, Query)] = Seq(
     // html_extract: the identical synthesis + extraction chain, step
     // for step (see operators.Html.extractColumns). chr(1)/chr(2) are
     // the anchor markers; entity decode order puts &amp; last.
-    "html_extract" ->
+    "html_extract" -> Query(htmlExtract,
       """WITH h0 AS (SELECT doc_id,
         |  '<html><head><style>p{margin:0}</style><script>var n='
         |  || doc_id || ';track(n)</script></head><body>'
@@ -541,12 +513,12 @@ object TextQueries {
         |  CAST(length(content) AS BIGINT) AS n_chars, link_chars, raw_chars
         |  FROM c)
         |SELECT doc_id, line_no, content, n_words, n_chars, link_chars
-        |FROM w WHERE n_words >= 3 AND 2 * link_chars <= raw_chars""".stripMargin,
+        |FROM w WHERE n_words >= 3 AND 2 * link_chars <= raw_chars""".stripMargin),
     // the hashed-ngram linear classifier: features = word unigrams +
     // bigrams (positional, non-distinct), bucket = 60-bit md5 prefix
     // mod 65536, weight = the public md5 milli-weight formula the
     // engine's broadcast vector is derived from
-    "quality_filter_linear" ->
+    "quality_filter_linear" -> Query(qualityFilterLinear,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
         |g AS (
         |  SELECT doc_id, unnest(words) AS g FROM t
@@ -562,8 +534,8 @@ object TextQueries {
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
         |  CAST(sum(w) AS BIGINT) AS score_sum,
         |  CAST(sum(w) >= 0 AS INT) AS keep
-        |FROM w GROUP BY doc_id""".stripMargin,
-    "quality_filter_gopher" ->
+        |FROM w GROUP BY doc_id""".stripMargin),
+    "quality_filter_gopher" -> Query(qualityFilterGopher,
       s"""WITH w AS (SELECT doc_id, text,
          |    string_split_regex(trim(text), '\\s+') AS words,
          |    string_split(text, chr(10)) AS lines
@@ -589,8 +561,8 @@ object TextQueries {
          |  AND symbol_word_ratio <= 0.1 AND bullet_line_frac <= 0.9
          |  AND ellipsis_line_frac <= 0.3 AND alpha_word_frac >= 0.8
          |  AND stop_hits >= 2) AS gopher_keep
-         |FROM s""".stripMargin,
-    "dsir_select" ->
+         |FROM s""".stripMargin),
+    "dsir_select" -> Query(dsirSelect,
       """WITH w AS (SELECT doc_id, lang = 'en' AS tgt,
         |    string_split(text, ' ') AS words FROM documents),
         |g AS (SELECT doc_id, tgt, unnest(words) AS gram FROM w
@@ -622,8 +594,8 @@ object TextQueries {
         |    > CAST(sc.n_grams AS HUGEINT) * tlr.v, false) AS selected
         |FROM documents d
         |LEFT JOIN sc ON d.doc_id = sc.doc_id
-        |CROSS JOIN dn CROSS JOIN tot CROSS JOIN tlr""".stripMargin,
-    "dsir_resample" ->
+        |CROSS JOIN dn CROSS JOIN tot CROSS JOIN tlr""".stripMargin),
+    "dsir_resample" -> Query(dsirResample,
       """WITH w AS (SELECT doc_id, lang = 'en' AS tgt,
         |    string_split(text, ' ') AS words FROM documents),
         |g AS (SELECT doc_id, tgt, unnest(words) AS gram FROM w
@@ -664,8 +636,8 @@ object TextQueries {
         |  CAST(row_number() OVER (ORDER BY gumbel_key DESC, u, doc_id)
         |    AS BIGINT) AS rank
         |FROM gk
-        |QUALIFY rank <= 200""".stripMargin,
-    "token_budget_sample" ->
+        |QUALIFY rank <= 200""".stripMargin),
+    "token_budget_sample" -> Query(tokenBudgetSample,
       """WITH tk AS (SELECT doc_id, source,
         |    CAST(len(regexp_extract_all(text,
         |      ' ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+')) AS BIGINT) AS tokens
@@ -676,8 +648,8 @@ object TextQueries {
         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
         |  FROM tk)
         |SELECT doc_id, source, tokens, cum_tokens
-        |FROM c WHERE cum_tokens <= 600""".stripMargin,
-    "curriculum_order" ->
+        |FROM c WHERE cum_tokens <= 600""".stripMargin),
+    "curriculum_order" -> Query(curriculumOrder,
       """WITH tk AS (SELECT doc_id, source,
         |    CAST(len(regexp_extract_all(text,
         |      ' ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+')) AS BIGINT) AS tokens
@@ -698,9 +670,9 @@ object TextQueries {
         |SELECT doc_id, source, tokens, stage, pos,
         |  CAST(row_number() OVER (PARTITION BY stage
         |    ORDER BY pos, source, doc_id) AS INT) AS curriculum_rank
-        |FROM ps""".stripMargin,
-    "tokenize_pack" -> tokenizePackOracle,
-    "phrase_search" ->
+        |FROM ps""".stripMargin),
+    "tokenize_pack" -> Query(tokenizePack, tokenizePackOracle),
+    "phrase_search" -> Query(phraseSearch,
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS words FROM documents
         |), g AS (
@@ -717,8 +689,8 @@ object TextQueries {
         |  CAST(count(*) AS BIGINT) AS n_hits,
         |  CAST(min(pos) AS BIGINT) AS first_pos
         |FROM g JOIN top1 USING (gram)
-        |GROUP BY 1, 2""".stripMargin,
-    "text_lm_score" ->
+        |GROUP BY 1, 2""".stripMargin),
+    "text_lm_score" -> Query(textLmScore,
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS words FROM documents
         |), g AS (
@@ -742,10 +714,10 @@ object TextQueries {
         |  coalesce(n_rare, 0) AS n_rare,
         |  coalesce(round(CAST(n_rare AS DOUBLE) / n_bigrams, 6), 0.0)
         |    AS rare_ratio
-        |FROM documents d LEFT JOIN s USING (doc_id)""".stripMargin,
-    "bpe_train" -> bpeTrainOracle,
-    "bpe_token_count" -> bpeTokenCountOracle,
-    "vocab_coverage" ->
+        |FROM documents d LEFT JOIN s USING (doc_id)""".stripMargin),
+    "bpe_train" -> Query(bpeTrain, bpeTrainOracle),
+    "bpe_token_count" -> Query(bpeTokenCount, bpeTokenCountOracle),
+    "vocab_coverage" -> Query(vocabCoverage,
       """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |           FROM documents),
         |tok AS (SELECT doc_id, token FROM t WHERE token <> ''),
@@ -756,9 +728,9 @@ object TextQueries {
         |  CAST(count(v.token) AS BIGINT) AS n_in_vocab,
         |  round(CAST(count(v.token) AS DOUBLE) / count(*), 6) AS coverage
         |FROM tok LEFT JOIN v ON tok.token = v.token
-        |GROUP BY doc_id""".stripMargin,
-    "sql_vocab_topk" -> vocabOracle,
-    "tfidf_topk" ->
+        |GROUP BY doc_id""".stripMargin),
+    "sql_vocab_topk" -> Query(sqlVocabTopk, vocabOracle),
+    "tfidf_topk" -> Query(tfidfTopk,
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |             FROM documents),
         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok
@@ -770,12 +742,12 @@ object TextQueries {
         |r AS (SELECT doc_id, token, tfidf, row_number() OVER (PARTITION BY doc_id
         |        ORDER BY tfidf DESC, token ASC) AS rn FROM scored)
         |SELECT doc_id, token, CAST(rn AS INT) AS rank, tfidf
-        |FROM r WHERE rn <= 5""".stripMargin,
+        |FROM r WHERE rn <= 5""".stripMargin),
     // BM25: one double expression tree per (doc, term), mirrored
     // operator-for-operator (identical parenthesization = identical
     // IEEE rounding) and quantized to micro-points BEFORE the per-doc
     // sum so the sum is order-free long addition.
-    "bm25_topk" ->
+    "bm25_topk" -> Query(bm25Topk,
       """WITH t AS (SELECT doc_id, token FROM (
         |       SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |       FROM documents)
@@ -799,19 +771,19 @@ object TextQueries {
         |       CAST(sum(contrib) AS BIGINT) AS score_micro
         |FROM c GROUP BY 1
         |ORDER BY score_micro DESC, doc_id ASC
-        |LIMIT 20""".stripMargin,
-    "inverted_index" ->
+        |LIMIT 20""".stripMargin),
+    "inverted_index" -> Query(invertedIndex,
       """SELECT token,
         |  array_to_string(list_sort(list(doc_id)), ',') AS postings,
         |  CAST(count(*) AS BIGINT) AS df
         |FROM (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
         |      FROM documents)
         |WHERE token <> ''
-        |GROUP BY token HAVING count(*) <= 400""".stripMargin,
-    "text_repetition" ->
+        |GROUP BY token HAVING count(*) <= 400""".stripMargin),
+    "text_repetition" -> Query(textRepetition,
       s"""SELECT doc_id, ${repN(2)} AS rep2, ${repN(3)} AS rep3
-         |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "doc_length_stats" ->
+         |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin),
+    "doc_length_stats" -> Query(docLengthStats,
       s"""SELECT lang,
          |  CAST(count(*) AS BIGINT) AS n_docs,
          |  min(n_words) AS min_words,
@@ -822,9 +794,9 @@ object TextQueries {
          |  round(quantile_cont(n_words, 0.75), 6) AS p75,
          |  round(quantile_cont(n_words, 0.95), 6) AS p95
          |FROM (SELECT lang, CAST($nWords AS INT) AS n_words FROM documents)
-         |GROUP BY lang""".stripMargin,
-    "vocab_topk" -> vocabOracle,
-    "text_stats" ->
+         |GROUP BY lang""".stripMargin),
+    "vocab_topk" -> Query(vocabTopk, vocabOracle),
+    "text_stats" -> Query(textStats,
       s"""SELECT doc_id,
          |  $nWords AS n_words,
          |  len(regexp_extract_all(text, ' ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+')) AS bpe_tokens,
@@ -832,18 +804,18 @@ object TextQueries {
          |  $awl AS avg_word_len,
          |  $punct AS punct_ratio,
          |  $digit AS digit_ratio
-         |FROM documents""".stripMargin,
-    "text_langid" ->
+         |FROM documents""".stripMargin),
+    "text_langid" -> Query(textLangid,
       s"""SELECT doc_id,
          |  $langPredExpr AS lang_pred,
          |  ${langNames.map(l => s"${hits(l)} AS ${l}_hits").mkString(", ")}
-         |FROM documents""".stripMargin,
-    "text_quality" ->
+         |FROM documents""".stripMargin),
+    "text_quality" -> Query(textQuality,
       s"""SELECT doc_id,
          |  $stopRatio AS stopword_ratio,
          |  $qualityExpr AS quality_score
-         |FROM documents""".stripMargin,
-    "text_pii_redact" ->
+         |FROM documents""".stripMargin),
+    "text_pii_redact" -> Query(textPiiRedact,
       s"""WITH planted AS (
          |  SELECT doc_id,
          |    CASE WHEN doc_id % 3 = 0 THEN text
@@ -860,8 +832,8 @@ object TextQueries {
          |    '${T.EmailRe}', '[EMAIL]', 'g'),
          |    '${T.Ipv4Re}', '[IP]', 'g'),
          |    '${T.PhoneRe}', '[PHONE]', 'g') AS clean_text
-         |FROM planted""".stripMargin,
-    "text_fingerprint" ->
+         |FROM planted""".stripMargin),
+    "text_fingerprint" -> Query(textFingerprint,
       s"""SELECT doc_id,
          |  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
          |    '\\s+', ' ', 'g'))) AS fingerprint,
@@ -869,6 +841,6 @@ object TextQueries {
          |    generate_series(1, len(words) - 4),
          |    i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2] || ' '
          |         || words[i+3] || ' ' || words[i+4])), sh -> md5(sh))) AS winnow_min
-         |FROM (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents)""".stripMargin
+         |FROM (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents)""".stripMargin)
   )
 }

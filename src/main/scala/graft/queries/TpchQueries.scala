@@ -534,53 +534,31 @@ object TpchQueries {
     spark.sql(sql)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tpch_q1" -> run(Q1) _,
-    "tpch_q3" -> run(Q3) _,
-    "tpch_q5" -> run(Q5) _,
-    "tpch_q13" -> run(Q13) _,
-    "tpch_q18" -> run(Q18) _,
-    "tpch_q6" -> run(Q6) _,
-    "tpch_q10" -> run(Q10) _,
-    "tpch_q4" -> run(Q4) _,
-    "tpch_q7" -> run(Q7) _,
-    "tpch_q8" -> run(Q8) _,
-    "tpch_q12" -> run(Q12) _,
-    "tpch_q14" -> run(Q14) _,
-    "tpch_q17" -> run(Q17) _,
-    "tpch_q19" -> run(Q19) _,
-    "tpch_q21" -> run(Q21) _,
-    "tpch_q22" -> run(Q22) _,
-    "tpch_q15" -> run(Q15) _,
-    "tpch_q2" -> run(Q2) _,
-    "tpch_q9" -> run(Q9) _,
-    "tpch_q11" -> run(Q11) _,
-    "tpch_q16" -> run(Q16) _,
-    "tpch_q20" -> run(Q20) _
-  )
+  private def tpch(name: String, sql: String): (String, Query) =
+    name -> Query(run(sql), sql)
 
-  val oracle: Map[String, String] = Map(
-    "tpch_q1" -> Q1,
-    "tpch_q3" -> Q3,
-    "tpch_q5" -> Q5,
-    "tpch_q13" -> Q13,
-    "tpch_q18" -> Q18,
-    "tpch_q6" -> Q6,
-    "tpch_q10" -> Q10,
-    "tpch_q4" -> Q4,
-    "tpch_q7" -> Q7,
-    "tpch_q8" -> Q8,
-    "tpch_q12" -> Q12,
-    "tpch_q14" -> Q14,
-    "tpch_q17" -> Q17,
-    "tpch_q19" -> Q19,
-    "tpch_q21" -> Q21,
-    "tpch_q22" -> Q22,
-    "tpch_q15" -> Q15,
-    "tpch_q2" -> Q2,
-    "tpch_q9" -> Q9,
-    "tpch_q11" -> Q11,
-    "tpch_q16" -> Q16,
-    "tpch_q20" -> Q20
+  val entries: Seq[(String, Query)] = Seq(
+    tpch("tpch_q1", Q1),
+    tpch("tpch_q3", Q3),
+    tpch("tpch_q5", Q5),
+    tpch("tpch_q13", Q13),
+    tpch("tpch_q18", Q18),
+    tpch("tpch_q6", Q6),
+    tpch("tpch_q10", Q10),
+    tpch("tpch_q4", Q4),
+    tpch("tpch_q7", Q7),
+    tpch("tpch_q8", Q8),
+    tpch("tpch_q12", Q12),
+    tpch("tpch_q14", Q14),
+    tpch("tpch_q17", Q17),
+    tpch("tpch_q19", Q19),
+    tpch("tpch_q21", Q21),
+    tpch("tpch_q22", Q22),
+    tpch("tpch_q15", Q15),
+    tpch("tpch_q2", Q2),
+    tpch("tpch_q9", Q9),
+    tpch("tpch_q11", Q11),
+    tpch("tpch_q16", Q16),
+    tpch("tpch_q20", Q20)
   )
 }

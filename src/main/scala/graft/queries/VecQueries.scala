@@ -403,33 +403,6 @@ object VecQueries {
           x => x.cast("string")), ",").as("proj_csv"),
         col("pnorm2"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embedding_projection" -> embeddingProjection,
-    "embedding_covariance" -> embeddingCovariance,
-    "ann_index_pruned" -> annIndexPruned,
-    "streaming_pq_encode" -> streamingPqEncode,
-    "streaming_ann" -> streamingAnn,
-    "negative_sample" -> negativeSample,
-    "hard_negatives" -> hardNegatives,
-    "similarity_pq" -> topkPq,
-    "similarity_ivfpq" -> topkIvfPq,
-    "mmr_diversify" -> topkMmr,
-    "similarity_topk" -> topkBrute,
-    "similarity_lsh" -> topkLsh,
-    "similarity_lsh_mp" -> topkLshMp,
-    "similarity_ivf" -> topkIvf,
-    "similarity_ivf_mp" -> topkIvfMp,
-    "similarity_ivf_train" -> topkIvfTrain,
-    "similarity_recall" -> similarityRecall,
-    "similarity_mrr" -> similarityMrr,
-    "similarity_rrf" -> topkRrf,
-    "hybrid_retrieval" -> hybridRetrieval,
-    "embedding_quantize" -> ((s: SparkSession, dir: String) =>
-      Quantize.int8(Tables.embeddings(s, dir), "embedding", Seq("vec_id"))),
-    "embedding_zscore" -> ((s: SparkSession, dir: String) =>
-      Quantize.zscore(Tables.embeddings(s, dir), "vec_id", "embedding"))
-  )
-
   // -- oracle SQL ------------------------------------------------------
 
   private val qCte: String =
@@ -664,8 +637,8 @@ object VecQueries {
        |  FROM adc) t
        |WHERE rank <= 5""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "embedding_projection" -> {
+  val entries: Seq[(String, Query)] = Seq(
+    "embedding_projection" -> Query(embeddingProjection, {
       val dots = (0 until 16).map { j =>
         s"""CAST(list_dot_product(qv,
            |      list_transform(generate_series(0, 63),
@@ -681,8 +654,8 @@ object VecQueries {
          |  array_to_string(proj, ',') AS proj_csv,
          |  CAST(list_dot_product(proj, proj) AS BIGINT) AS pnorm2
          |FROM p""".stripMargin
-    },
-    "embedding_covariance" ->
+    }),
+    "embedding_covariance" -> Query(embeddingCovariance,
       s"""WITH $qCte,
          |dim AS (SELECT d.i, CAST(sum(qv[d.i+1]) AS BIGINT) AS s
          |  FROM q, unnest(generate_series(0, 63)) d(i) GROUP BY d.i),
@@ -696,9 +669,9 @@ object VecQueries {
          |  cnt.nv AS n, di.s AS sum_i, dj.s AS sum_j, xy.sxy AS sum_ij,
          |  CAST(cnt.nv * xy.sxy - di.s * dj.s AS BIGINT) AS cov_num
          |FROM xy, cnt, dim di, dim dj
-         |WHERE di.i = xy.i AND dj.i = xy.j""".stripMargin,
-    "mmr_diversify" -> mmrOracle(5, 20, 7),
-    "similarity_pq" ->
+         |WHERE di.i = xy.i AND dj.i = xy.j""".stripMargin),
+    "mmr_diversify" -> Query(topkMmr, mmrOracle(5, 20, 7)),
+    "similarity_pq" -> Query(topkPq,
       s"""WITH $qCte,
          |$pqCtes,
          |adc AS (SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
@@ -711,9 +684,9 @@ object VecQueries {
          |    CAST(row_number() OVER (PARTITION BY query_id
          |      ORDER BY adc_dist, neighbor_id) AS INT) AS rank
          |  FROM adc) t
-         |WHERE rank <= 5""".stripMargin,
-    "similarity_ivfpq" -> ivfPqOracle,
-    "similarity_mrr" ->
+         |WHERE rank <= 5""".stripMargin),
+    "similarity_ivfpq" -> Query(topkIvfPq, ivfPqOracle),
+    "similarity_mrr" -> Query(similarityMrr,
       s"""WITH $qCte,
          |truth AS (SELECT query_id, neighbor_id FROM (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -797,11 +770,11 @@ object VecQueries {
          |SELECT 'lsh_mp', qs.query_id, CAST(coalesce(fh, 0) AS INT),
          |  CASE WHEN fh IS NULL THEN CAST(0.0 AS DOUBLE)
          |       ELSE CAST(1.0 AS DOUBLE) / fh END
-         |FROM qs LEFT JOIN fh4 USING (query_id)""".stripMargin,
+         |FROM qs LEFT JOIN fh4 USING (query_id)""".stripMargin),
     // the persisted bucket-pruned index runs the identical dials, so
     // its rows are the composed query's rows
-    "ann_index_pruned" -> ivfPqOracle,
-    "hard_negatives" ->
+    "ann_index_pruned" -> Query(annIndexPruned, ivfPqOracle),
+    "hard_negatives" -> Query(hardNegatives,
       s"""WITH $qCte
          |SELECT query_id, anchor_label, neighbor_id, neg_label, rank, cosine
          |FROM (
@@ -817,8 +790,8 @@ object VecQueries {
          |  WHERE ea.vec_id = a.vec_id AND eb.vec_id = b.vec_id
          |    AND a.vec_id < 10 AND b.vec_id <> a.vec_id
          |    AND eb.label <> ea.label)
-         |WHERE rank <= 5""".stripMargin,
-    "negative_sample" ->
+         |WHERE rank <= 5""".stripMargin),
+    "negative_sample" -> Query(negativeSample,
       """WITH lab AS (SELECT DISTINCT label AS alab FROM embeddings),
         |pool AS (
         |  SELECT l.alab, e.vec_id AS nid, e.label AS nlab,
@@ -836,21 +809,21 @@ object VecQueries {
         |)
         |SELECT d.anchor_id, d.j, p.nid AS neg_id,
         |  d.alab AS anchor_label, p.nlab AS neg_label
-        |FROM d JOIN pool p ON p.alab = d.alab AND p.r = d.idx""".stripMargin,
+        |FROM d JOIN pool p ON p.alab = d.alab AND p.r = d.idx""".stripMargin),
     // the ingest twin's cells and codes re-derive from the trained
     // router (tasg) + trained codebook (pqcodes) chains directly
-    "streaming_pq_encode" ->
+    "streaming_pq_encode" -> Query(streamingPqEncode,
       s"""WITH $qCte,
          |$ivfTrainCtes,
          |$pqCtes
          |SELECT t.vec_id, CAST(t.cell AS BIGINT) AS cell,
          |  CAST(p.s AS INT) AS s, CAST(p.cidx AS BIGINT) AS cidx
          |FROM tasg t JOIN pqcodes p ON p.vec_id = t.vec_id
-         |WHERE t.vec_id < 50""".stripMargin,
+         |WHERE t.vec_id < 50""".stripMargin),
     // the streaming twin probes the identical trained index with the
     // identical dials, so its oracle is the similarity_ivf_train SQL
     // verbatim — the streaming engine must land on the same rows
-    "streaming_ann" ->
+    "streaming_ann" -> Query(streamingAnn,
       s"""WITH $qCte,
          |$ivfTrainCtes
          |SELECT query_id, neighbor_id, rank, cosine FROM (
@@ -861,8 +834,8 @@ object VecQueries {
          |      ORDER BY CAST(list_dot_product(a.qv, b.qv) AS BIGINT)::DOUBLE
          |        / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) DESC, b.vec_id ASC) AS INT) AS rank
          |  FROM tqasg a JOIN tasg b ON a.cell = b.cell AND b.vec_id <> a.vec_id)
-         |WHERE rank <= 5""".stripMargin,
-    "similarity_ivf_train" ->
+         |WHERE rank <= 5""".stripMargin),
+    "similarity_ivf_train" -> Query(topkIvfTrain,
       s"""WITH $qCte,
          |$ivfTrainCtes
          |SELECT query_id, neighbor_id, rank, cosine FROM (
@@ -873,11 +846,11 @@ object VecQueries {
          |      ORDER BY CAST(list_dot_product(a.qv, b.qv) AS BIGINT)::DOUBLE
          |        / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) DESC, b.vec_id ASC) AS INT) AS rank
          |  FROM tqasg a JOIN tasg b ON a.cell = b.cell AND b.vec_id <> a.vec_id)
-         |WHERE rank <= 5""".stripMargin,
+         |WHERE rank <= 5""".stripMargin),
     // hybrid: the bm25_topk CTE chain (query terms from doc 0, doc 0
     // excluded from candidates) + the similarity_topk cosine mirror
     // for query vector 0 + the similarity_rrf fusion formula.
-    "hybrid_retrieval" ->
+    "hybrid_retrieval" -> Query(hybridRetrieval,
       s"""WITH $qCte,
          |t AS (SELECT doc_id, token FROM (
          |       SELECT doc_id, unnest(string_split(text, ' ')) AS token
@@ -922,8 +895,8 @@ object VecQueries {
          |    CAST(row_number() OVER (PARTITION BY query_id
          |      ORDER BY rrf DESC, neighbor_id ASC) AS BIGINT) AS fused_rank
          |  FROM f)
-         |WHERE fused_rank <= 10""".stripMargin,
-    "similarity_rrf" ->
+         |WHERE fused_rank <= 10""".stripMargin),
+    "similarity_rrf" -> Query(topkRrf,
       s"""WITH $qCte,
          |bk AS (SELECT vec_id, qv, n2,
          |         CAST(${bucketExpr("qv")} AS BIGINT) AS bucket FROM n),
@@ -952,8 +925,9 @@ object VecQueries {
          |    CAST(row_number() OVER (PARTITION BY query_id
          |      ORDER BY rrf DESC, neighbor_id ASC) AS BIGINT) AS fused_rank
          |  FROM f)
-         |WHERE fused_rank <= 5""".stripMargin,
-    "embedding_zscore" ->
+         |WHERE fused_rank <= 5""".stripMargin),
+    "embedding_zscore" -> Query((s, dir) =>
+      Quantize.zscore(Tables.embeddings(s, dir), "vec_id", "embedding"),
       s"""WITH $qCte,
          |e AS (SELECT vec_id,
          |        CAST(unnest(generate_series(1, len(qv))) AS BIGINT) AS dim,
@@ -967,8 +941,9 @@ object VecQueries {
          |  CASE WHEN (n * q2 - s * s) <= 0 THEN NULL
          |       ELSE CAST(n * e.x - s AS DOUBLE) / sqrt(CAST(n * q2 - s * s AS DOUBLE))
          |  END AS z
-         |FROM e JOIN m USING (dim)""".stripMargin,
-    "embedding_quantize" ->
+         |FROM e JOIN m USING (dim)""".stripMargin),
+    "embedding_quantize" -> Query((s, dir) =>
+      Quantize.int8(Tables.embeddings(s, dir), "embedding", Seq("vec_id")),
       """WITH q AS (SELECT vec_id,
         |    list_transform(embedding,
         |      x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qv
@@ -986,8 +961,8 @@ object VecQueries {
         |  CAST(COALESCE(list_sum(list_transform(qv, (v, i) ->
         |    abs(v - (mn_q + (codes[i] * (mx_q - mn_q)) // 255)))), 0) AS BIGINT)
         |    AS abs_err_q
-        |FROM c""".stripMargin,
-    "similarity_lsh_mp" ->
+        |FROM c""".stripMargin),
+    "similarity_lsh_mp" -> Query(topkLshMp,
       s"""WITH $qCte,
          |bk AS (SELECT vec_id, qv, n2,
          |         CAST(${bucketExpr("qv")} AS BIGINT) AS bucket FROM n),
@@ -1000,8 +975,8 @@ object VecQueries {
          |      ORDER BY CAST(list_dot_product(a.qv, b.qv) AS BIGINT)::DOUBLE
          |        / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) DESC, b.vec_id ASC) AS INT) AS rank
          |  FROM mp a JOIN bk b ON b.bucket = a.pbucket AND b.vec_id <> a.vec_id)
-         |WHERE rank <= 5""".stripMargin,
-    "similarity_recall" ->
+         |WHERE rank <= 5""".stripMargin),
+    "similarity_recall" -> Query(similarityRecall,
       s"""WITH $qCte,
          |truth AS (SELECT query_id, neighbor_id FROM (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -1160,8 +1135,8 @@ object VecQueries {
          |SELECT 'ivfpq' AS method, query_id,
          |  CAST(coalesce(hipq.hits, 0) AS BIGINT) AS hits,
          |  CAST(coalesce(hipq.hits, 0) AS DOUBLE) / 5 AS recall_at_5
-         |FROM qs LEFT JOIN hipq USING (query_id)""".stripMargin,
-    "similarity_topk" ->
+         |FROM qs LEFT JOIN hipq USING (query_id)""".stripMargin),
+    "similarity_topk" -> Query(topkBrute,
       s"""WITH $qCte
          |SELECT query_id, neighbor_id, rank, cosine FROM (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -1172,8 +1147,8 @@ object VecQueries {
          |        / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) DESC, b.vec_id ASC) AS INT) AS rank
          |  FROM n a, n b
          |  WHERE a.vec_id < 10 AND b.vec_id <> a.vec_id)
-         |WHERE rank <= 5""".stripMargin,
-    "similarity_ivf_mp" ->
+         |WHERE rank <= 5""".stripMargin),
+    "similarity_ivf_mp" -> Query(topkIvfMp,
       s"""WITH $qCte,
          |cents AS (SELECT vec_id AS cent_id, qv AS qcent, n2 AS n2cent FROM n
          |          ORDER BY md5('centroid:' || CAST(vec_id AS VARCHAR)), vec_id
@@ -1200,8 +1175,8 @@ object VecQueries {
          |      ORDER BY CAST(list_dot_product(a.qv, b.qv) AS BIGINT)::DOUBLE
          |        / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) DESC, b.vec_id ASC) AS INT) AS rank
          |  FROM qasg a JOIN asg b ON a.cell = b.cell AND b.vec_id <> a.vec_id)
-         |WHERE rank <= 5""".stripMargin,
-    "similarity_ivf" ->
+         |WHERE rank <= 5""".stripMargin),
+    "similarity_ivf" -> Query(topkIvf,
       s"""WITH $qCte,
          |cents AS (SELECT vec_id AS cent_id, qv AS qcent, n2 AS n2cent FROM n
          |          ORDER BY md5('centroid:' || CAST(vec_id AS VARCHAR)), vec_id
@@ -1222,8 +1197,8 @@ object VecQueries {
          |        / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) DESC, b.vec_id ASC) AS INT) AS rank
          |  FROM asg a JOIN asg b ON a.cell = b.cell AND b.vec_id <> a.vec_id
          |  WHERE a.vec_id < 10)
-         |WHERE rank <= 5""".stripMargin,
-    "similarity_lsh" ->
+         |WHERE rank <= 5""".stripMargin),
+    "similarity_lsh" -> Query(topkLsh,
       s"""WITH $qCte,
          |bk AS (SELECT vec_id, qv, n2,
          |         CAST(${bucketExpr("qv")} AS BIGINT) AS bucket FROM n)
@@ -1236,6 +1211,6 @@ object VecQueries {
          |        / sqrt(a.n2::DOUBLE * b.n2::DOUBLE) DESC, b.vec_id ASC) AS INT) AS rank
          |  FROM bk a JOIN bk b ON a.bucket = b.bucket AND b.vec_id <> a.vec_id
          |  WHERE a.vec_id < 10)
-         |WHERE rank <= 5""".stripMargin
+         |WHERE rank <= 5""".stripMargin)
   )
 }

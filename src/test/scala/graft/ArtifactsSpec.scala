@@ -19,6 +19,14 @@ class ArtifactsSpec extends SparkSpec {
   private def built(kind: String, corpus: Any, dials: Any*): Artifacts.Layout =
     Artifacts.table(spark, kind, corpus, dials: _*)(_ => fail(s"$kind was not built"))
 
+  test("planDigest of a parquet-scan corpus is the same in a new session") {
+    // layouts are named from the key's md5, and the key starts with the
+    // session UUID, so catalog names differ across sessions by design;
+    // the corpus digest itself must not
+    assert(Artifacts.planDigest(Tables.documents(spark.newSession(), sf)) ===
+      Artifacts.planDigest(Tables.documents(spark, sf)))
+  }
+
   test("clear drops every table, deletes every dir, forgets every value; the next call rebuilds") {
     val docs = Tables.documents(spark, sf)
     Dedup.shingleIndex(docs, "doc_id", "text", 5)

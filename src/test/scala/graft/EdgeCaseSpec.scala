@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{BloomJoin, Clustering, Dedup, Packing, RangeJoin, Sampling, Sketches}
+import graft.queries.{EventQueries, TpchQueries}
 
 /** Degenerate-input behavior a library consumer will eventually hit:
   * empty tables, fewer rows than requested clusters, empty join sides.
@@ -183,24 +184,16 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("query registry is collision-free across modules (Map ++ shadows silently)") {
-    def dups[V](mods: Seq[Map[String, V]]): Seq[String] =
-      mods.flatMap(_.keys).groupBy(identity).collect {
-        case (k, ks) if ks.size > 1 => k
-      }.toSeq.sorted
-    assert(dups(SparkEntry.queryModules) === Seq.empty,
-      "duplicate query names across modules")
-    assert(dups(SparkEntry.oracleModules) === Seq.empty,
-      "duplicate oracle names across modules")
-    // every oracle points at a registered query
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans === Set.empty, s"oracles without queries: $orphans")
-    // ...and every registered query ships an oracle. This is the
-    // direction that rots coverage: round 7 registered two queries
-    // with no oracle SQL and both recorded `err: no_oracle` in the
-    // driver gate — an unverifiable query must not compile into the
-    // contract silently.
-    val unverified = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unverified === Set.empty, s"queries without oracles: $unverified")
+    // SparkEntry.byName throws on a duplicate, so reaching the maps at
+    // all means every name in the one flattened entry list is unique
+    assert(SparkEntry.queries.size === SparkEntry.entries.size)
+    // a duplicate inside one module is caught too, not just across them
+    val within = intercept[IllegalArgumentException](
+      SparkEntry.byName(EventQueries.entries :+ EventQueries.entries.head))
+    assert(within.getMessage.endsWith(s": ${EventQueries.entries.head._1}"))
+    val across = intercept[IllegalArgumentException](
+      SparkEntry.byName(SparkEntry.entries ++ TpchQueries.entries.take(2)))
+    assert(across.getMessage.endsWith(": tpch_q1, tpch_q3"))
   }
 
   test("query filter: none selects every query, sorted by name") {
@@ -284,7 +277,6 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("format round-trip survives hostile text: newlines, quotes, unicode, null") {
-    import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft-fmt").toFile
     val docs = Seq(
       (1L, Some("line1\nline2\r\nline3"), 20L),   // newlines INSIDE a value

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ElbParseFields, LongArrayDot}
+import graft.functions.LongArrayDot
 
 class ExpressionSpec extends SparkSpec {
   import spark.implicits._

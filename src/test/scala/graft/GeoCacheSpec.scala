@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.operators.GeoCache
-import graft.sources.{GeoProvider, StaticGeoProvider}
+import graft.sources.StaticGeoProvider
 
 class GeoCacheSpec extends SparkSpec {
   import spark.implicits._

@@ -243,7 +243,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("round-7 ops are partitioning-invariant (exact-integer determinism)") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val rnd = new scala.util.Random(123)
     // triangles over a random graph

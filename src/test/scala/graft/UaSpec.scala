@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.functions.Ua
 
 /** Real-world user-agent strings → expected families, pinning the rule

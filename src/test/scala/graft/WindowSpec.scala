@@ -18,7 +18,7 @@ class WindowSpecSuite extends SparkSpec {
       ("a", ts("2024-01-01 00:05:00"), 2L),   // exactly +300 s
       ("a", ts("2024-01-01 00:09:59"), 3L)    // +299 s after the second
     ).toDF("ip", "time", "id")
-    val out = Rolling.addRollingFeatures(df, "ip", "time", "id", "id")
+    val out = Rolling.addRollingFeaturesChunked(df, "ip", "time", "id", "id")
       .orderBy("id")
       .select("rolling_5min_request_count").as[Long].collect()
     assert(out.toSeq === Seq(1L, 1L, 2L))
@@ -54,7 +54,7 @@ class WindowSpecSuite extends SparkSpec {
       ("a", ts("2024-01-01 00:10:00"), None, 2L),
       ("a", ts("2024-01-01 00:20:00"), Some(4.0), 3L)
     ).toDF("ip", "time", "v", "id")
-    val out = Rolling.addRollingFeatures(df, "ip", "time", "id", "v")
+    val out = Rolling.addRollingFeaturesChunked(df, "ip", "time", "id", "v")
       .orderBy("id").select("rolling_1h_avg_processing").as[Option[Double]].collect()
     assert(out.toSeq === Seq(Some(2.0), Some(2.0), Some(3.0)))
   }
