@@ -9,7 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * lists, the basket index, the bucketed join tables, staged gzip
   * inputs, the pipeline geo cache) and bounded driver STATE (trained
   * centroids and codebooks, BPE merges, parquet schemas, skew
-  * verdicts). Build once, scan many times.
+  * verdicts). Build once, scan many times. The one session-shared
+  * value outside it is [[graft.queries.ElbSynth.lines]], a `.cache()`d
+  * DataFrame that `CacheManager` finds again by plan; its doc says
+  * why a layout would not serve it.
   *
   * '''Identity.''' Every key is built here, from (session UUID, kind,
   * corpus, dials) — nothing else makes a key. A corpus is a

@@ -30,10 +30,19 @@ object ElbPipeline {
 
   /** Parse raw lines from gzip/text logs under `logsPath`
     * (reference `extract_log_keys` + `transform_logs`,
-    * elb_logs.py:68-71,135-147). Spark's text source lists the prefix,
-    * auto-decompresses `.gz` (one partition per gzip file, like the
-    * reference's per-file loop), and `input_file_name()` supplies the
-    * lineage column. Works identically against `s3a://bucket/prefix`.
+    * elb_logs.py:68-71,135-147). Spark's text source lists the prefix
+    * and auto-decompresses `.gz`, and `input_file_name()` supplies the
+    * lineage column. A gzip file is not splittable, so each file is one
+    * split, and the file source packs whole splits into partitions of
+    * at most `min(maxPartitionBytes, max(openCostInBytes, total /
+    * defaultParallelism))` bytes (the `spark.sql.files.*` confs, 128 MB
+    * and 4 MB by default), where each file counts its size plus
+    * `openCostInBytes` and `total` sums those counts. Small files
+    * therefore share a partition: perfbench's `etl_backfill` reads its
+    * 16 gzip files in 4 tasks on 4 cores, where the reference loops over
+    * files one at a time. (The DSv2 reader,
+    * [[graft.sources.ElbLogSourceV2]], does give each file its own
+    * partition.) Works identically against `s3a://bucket/prefix`.
     */
   def extract(spark: SparkSession, logsPath: String): DataFrame =
     ElbParser.parse(spark.read.text(logsPath))

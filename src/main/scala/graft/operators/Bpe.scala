@@ -1,38 +1,42 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed BPE (byte-pair-encoding) vocabulary training — the
-  * tokenizer-construction step of a training-data pipeline, run as an
-  * iterative sequence of declarative plans.
+/** BPE (byte-pair-encoding) vocabulary training — the
+  * tokenizer-construction step of a training-data pipeline: one Spark
+  * action collects the corpus word histogram, and the merge rounds run
+  * on the driver over it.
   *
   * Classic BPE over a word histogram: every word starts as
   * space-separated characters (`" k e y "`); each round counts
   * adjacent symbol pairs corpus-wide (weighted by word frequency),
   * picks the most frequent pair, and merges every non-overlapping
   * left-to-right occurrence. Merge application is a plain literal
-  * `replace` of `" p1 p2 "` with `" p1p2 "`, which gives the identical
-  * scan semantics in Spark and DuckDB — including one deliberate
-  * variant vs textbook BPE: the replaced occurrence consumes its
-  * TRAILING separator, so the symbol immediately after a merge cannot
-  * begin another merge in the same round (`b b b b b` becomes
+  * `replace` of `" p1 p2 "` with `" p1p2 "` — Java's `String.replace`
+  * scans exactly as Spark's and DuckDB's `replace` do — including one
+  * deliberate variant vs textbook BPE: the replaced occurrence consumes
+  * its TRAILING separator, so the symbol immediately after a merge
+  * cannot begin another merge in the same round (`b b b b b` becomes
   * `bb b bb`, not `bb bb b`; the skipped merge is simply picked up by
   * a later round). PropertySpec pins this rule against a sequential
   * reference model, and the unrolled-CTE oracle hash-verifies the
-  * learned merge table. Argmax ties break by (freq DESC, p1, p2):
-  * fully deterministic, any partitioning.
+  * learned merge table. Argmax ties break by (freq DESC, p1, p2) with
+  * strings in UTF-8 byte order, which is codepoint order and the order
+  * Spark and DuckDB sort in: fully deterministic, any partitioning.
   *
   * Scale posture: the state is the word HISTOGRAM (vocabulary-sized,
   * millions of rows at 100 TB — not corpus-sized; the one corpus-sized
-  * pass is the initial word count). Each round is one explode +
-  * hash-aggregate shuffle over the histogram plus a TakeOrdered(1);
-  * the winning pair rejoins as a broadcast single row (never a
-  * driver-side collect-loop). `localCheckpoint` after every round
-  * keeps the plan linear in rounds instead of exponential (each
-  * round's input appears in both the argmax and the rewrite).
+  * pass is the word count). It is collected under a 4M-word cap that
+  * fails loudly before the driver can run out of memory, so a
+  * distributed round (an aggregate, an argmax and a rewrite job per
+  * merge) would only move a driver-sized table through the scheduler.
   */
 object Bpe {
+
+  private val MaxWords = 4 * 1000 * 1000
 
   /** Corpus word histogram: one corpus pass, vocabulary-sized output. */
   def wordHistogram(docs: DataFrame, textCol: String): DataFrame =
@@ -40,62 +44,70 @@ object Bpe {
       .where(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
-  /** `" k e y "` — per-character split with wrapping spaces, as the
-    * [[graft.functions.CharSpaced]] codegen byte walk (codepoint
-    * boundaries == the oracle's substr comprehension unit; Spark's
-    * split-on-empty-regex keeps a trailing empty token, so it is NOT
-    * used). The interpreted HOF twin lives on as
-    * [[graft.functions.CharSpaced.charSpacedTwin]] for the spec pins.
+  /** `" k e y "` — one space before every codepoint plus a trailing
+    * space: the oracle's `substr(word, i, 1)` unit, so a surrogate pair
+    * is one symbol.
     */
-  private def charSpaced(colName: String): Column =
-    graft.functions.CharSpaced.char_spaced(col(colName))
-
-  /** Train `rounds` merges. Returns (merges, vocab):
-    * merges = (round, p1, p2, freq) one row per learned merge;
-    * vocab  = (word, cnt, toks) the final symbol sequence per word.
-    */
-  def train(docs: DataFrame, textCol: String, rounds: Int): (DataFrame, DataFrame) = {
-    require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    var cur = wordHistogram(docs, textCol)
-      .withColumn("toks", charSpaced("word"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[DataFrame]
-    for (r <- 1 to rounds) {
-      // adjacent symbol pairs = word-2-grams of the single-space toks
-      // string: the codegen byte-walk kernel replaces the interpreted
-      // transform(sequence(...), i -> struct(arr[i], arr[i+1])) chain
-      // (the round-14 PositionalGrams discipline). Symbols never
-      // contain a space, so each gram "p1 p2" splits back losslessly —
-      // the (p1, p2) grouping and tie-break are bit-identical. Words
-      // with <2 symbols emit an empty gram array and drop at explode.
-      val pairs = cur
-        .select(col("cnt"), explode(graft.functions.PositionalGrams
-          .positional_grams(trim(col("toks")), 2, hashed = false)).as("_g"))
-        .groupBy(
-          substring_index(col("_g"), " ", 1).as("p1"),
-          substring_index(col("_g"), " ", -1).as("p2"))
-        .agg(sum("cnt").as("freq"))
-      val best = pairs
-        .orderBy(col("freq").desc, col("p1"), col("p2")).limit(1)
-        .select(lit(r).as("round"), col("p1"), col("p2"), col("freq"))
-        .localCheckpoint()
-      merges += best
-      // LEFT join on TRUE, not crossJoin: when a round learns no merge
-      // (the corpus is fully merged before `rounds` runs out) `best` is
-      // EMPTY, and a crossJoin would silently erase the vocabulary —
-      // the left join keeps every word with a null pair, and the CASE
-      // passes toks through unchanged. The oracle mirrors this shape.
-      cur = cur
-        .join(broadcast(best.select(col("p1").as("_bp1"), col("p2").as("_bp2"))),
-          lit(true), "left")
-        .withColumn("toks", expr(
-          """CASE WHEN _bp1 IS NULL THEN toks
-            |ELSE replace(toks, concat(' ', _bp1, ' ', _bp2, ' '),
-            |  concat(' ', _bp1, _bp2, ' ')) END""".stripMargin))
-        .drop("_bp1", "_bp2")
-        .localCheckpoint()
+  private[graft] def seed(word: String): String = {
+    val sb = new java.lang.StringBuilder(2 * word.length + 1)
+    var i = 0
+    while (i < word.length) {
+      val next = word.offsetByCodePoints(i, 1)
+      sb.append(' ').append(word, i, next)
+      i = next
     }
-    (merges.result().reduce(_ unionByName _), cur)
+    sb.append(' ').toString
+  }
+
+  /** UTF-8 byte order, which is codepoint order. `String.compareTo`
+    * compares UTF-16 units and so sorts U+1D11E before U+FFFD.
+    */
+  private val utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+  }
+
+  /** Train `rounds` merges. Returns (merges, toks):
+    * merges = (round, p1, p2, freq) one per learned merge;
+    * toks   = word → its final symbol sequence (`" k ey "`).
+    * A round with no adjacent pair left learns nothing.
+    */
+  def train(docs: DataFrame, textCol: String, rounds: Int)
+      : (Seq[(Int, String, String, Long)], Map[String, String]) = {
+    require(rounds >= 1, s"need rounds >= 1, got $rounds")
+    // the limit keeps the collect itself under the cap: checking only
+    // after an unbounded collect would let a pathological corpus OOM
+    // the driver before the intended loud failure fires
+    val hist = wordHistogram(docs, textCol).limit(MaxWords + 1).collect()
+    require(hist.length <= MaxWords,
+      s"BPE vocabulary has over $MaxWords words — past the driver-state " +
+        "cap; sample the training corpus (the codebook discipline) " +
+        "before training")
+    val words = hist.map(_.getString(0))
+    val cnts = hist.map(_.getLong(1))
+    val toks = words.map(seed)
+    val merges = Seq.newBuilder[(Int, String, String, Long)]
+    for (r <- 1 to rounds) {
+      val freq = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for (w <- toks.indices) {
+        // drop the wrapping spaces only: `trim` would also strip a
+        // tab or newline symbol
+        val syms = toks(w).substring(1, toks(w).length - 1).split(" ")
+        for (i <- 0 until syms.length - 1) {
+          val pair = (syms(i), syms(i + 1))
+          freq(pair) = freq.getOrElse(pair, 0L) + cnts(w)
+        }
+      }
+      if (freq.nonEmpty) {
+        val top = freq.valuesIterator.max
+        val (p1, p2) = freq.iterator.collect { case (p, f) if f == top => p }
+          .min(Ordering.Tuple2(utf8Order, utf8Order))
+        merges += ((r, p1, p2, top))
+        for (w <- toks.indices)
+          toks(w) = toks(w).replace(s" $p1 $p2 ", s" $p1$p2 ")
+      }
+    }
+    (merges.result(), words.zip(toks).toMap)
   }
 
   /** Trained state, memoized per (session, corpus plan, textCol,
@@ -104,40 +116,26 @@ object Bpe {
     * tokenize/count call is a map pass. The merge table is ≤ `rounds`
     * rows and the word→token-count table is vocabulary-sized —
     * driver-small by the same argument as the DSIR model (cap-guarded
-    * loudly; at 100 TB a natural-language vocabulary is millions of
-    * words, far under the cap, while corpus SIZE is irrelevant here).
-    * A [[graft.Artifacts]] state value.
+    * loudly in [[train]]; at 100 TB a natural-language vocabulary is
+    * millions of words, far under the cap, while corpus SIZE is
+    * irrelevant here). A [[graft.Artifacts]] state value.
     */
   private def trainedState(docs: DataFrame, textCol: String, rounds: Int)
-      : (Array[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.StructType, Map[String, Long]) =
+      : (Seq[(Int, String, String, Long)], Map[String, Long]) =
     graft.Artifacts.state(docs.sparkSession, "bpe_merges", docs, textCol,
         rounds) {
-      val (m, vocab) = train(docs, textCol, rounds)
-      val mergeRows = m.collect()
-      // cap BEFORE the collect: checking after would let a pathological
-      // corpus OOM the driver before the intended loud failure fires
-      // (vocab is checkpointed, so the count is a cached-scan job)
-      val nWords = vocab.count()
-      require(nWords <= 4L * 1000 * 1000,
-        s"BPE vocabulary has $nWords words — past the 4M driver-state " +
-          "cap; sample the training corpus (the codebook discipline) " +
-          "before training")
-      val vocabRows = vocab.select(col("word"),
-        size(split(trim(col("toks")), " ")).cast("long").as("ntok"))
-        .collect()
-      (mergeRows, m.schema,
-        vocabRows.map(r => r.getString(0) -> r.getLong(1)).toMap)
+      val (merges, toks) = train(docs, textCol, rounds)
+      (merges, toks.map { case (w, t) => w -> (t.count(_ == ' ') - 1L) })
     }
 
-  /** The learned merge table. Trains (and memoizes) on first call per
-    * (session, corpus, rounds); the returned plan is a local relation
-    * of ≤ `rounds` rows — no train stages re-run per consumer.
+  /** The learned merge table (round int, p1 string, p2 string, freq
+    * bigint). Trains (and memoizes) on first call per (session, corpus,
+    * rounds); the returned plan is a local relation of ≤ `rounds` rows
+    * — no train stages re-run per consumer.
     */
   def trainMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    val (rows, schema, _) = trainedState(docs, textCol, rounds)
-    docs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
+    import docs.sparkSession.implicits._
+    trainedState(docs, textCol, rounds)._1.toDF("round", "p1", "p2", "freq")
   }
 
   /** Per-document token counts under the trained vocabulary — a
@@ -151,7 +149,7 @@ object Bpe {
     */
   def tokenCounts(docs: DataFrame, idCol: String, textCol: String,
       rounds: Int): DataFrame = {
-    val (_, _, vocabTok) = trainedState(docs, textCol, rounds)
+    val (_, vocabTok) = trainedState(docs, textCol, rounds)
     docs
       .select(col(idCol), graft.functions.BpeWordTokens
         .bpe_word_tokens(col(textCol), vocabTok).as("_wt"))

@@ -48,6 +48,14 @@ object ElbSynth {
 
   /** events → DataFrame(value, log_source_file): one synthetic ELB line
     * per event row. Pure narrow projection — no shuffle.
+    *
+    * It stays outside [[graft.Artifacts]] on purpose. The lines are a
+    * `.cache()`d DataFrame, and Spark's `CacheManager` finds that cache
+    * again for every caller that builds the same plan, so no registry
+    * key is needed to share it. `Artifacts` holds only on-disk layouts
+    * and driver values; as a layout the lines would become a parquet
+    * table, and every `elb_*` query (`query_mix`'s timed `elb_parse`
+    * among them) would read parquet in place of the in-memory cache.
     */
   def lines(events: DataFrame): DataFrame = {
     val eid = col("event_id")

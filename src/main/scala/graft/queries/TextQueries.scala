@@ -169,7 +169,7 @@ object TextQueries {
 
   private val BpeRounds = 8
 
-  /** Distributed BPE vocabulary training: the learned merge table. */
+  /** BPE vocabulary training: the learned merge table. */
   def bpeTrain(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Bpe.trainMerges(
       Tables.distributed(spark, sfDir, "documents"), "text", BpeRounds)
@@ -387,9 +387,10 @@ object TextQueries {
       |FROM r WHERE rn <= 20""".stripMargin
 
   /** Unrolled-CTE twin of Bpe.train: rK holds the symbol table after k
-    * merges; bK the k-th learned merge. `replace` has the same
-    * scan-and-skip-past-replacement semantics in both engines, which is
-    * what makes the merge application hash-comparable.
+    * merges; bK the k-th learned merge. DuckDB's `replace` has the same
+    * scan-and-skip-past-replacement semantics as the Java
+    * `String.replace` the driver loop applies, which is what makes the
+    * merge application hash-comparable.
     */
   private def bpeCtes(rounds: Int): String = {
     val base =

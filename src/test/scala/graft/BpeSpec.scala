@@ -20,12 +20,20 @@ class BpeSpec extends SparkSpec {
     // merge rewrites ' a a a ' to ' aa a ' (the second occurrence's
     // leading space was consumed) — the classic BPE scan semantics.
     val docs = Seq("aaa aaa").toDF("text")
-    val (merges, vocab) = Bpe.train(docs, "text", rounds = 2)
-    val m = merges.as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+    val (m, toks) = Bpe.train(docs, "text", rounds = 2)
     assert(m(0) === ((1, "a", "a", 4L)))    // 2 adjacencies × 2 occurrences
     assert(m(1) === ((2, "aa", "a", 2L)))   // then (aa, a) once per word
-    val toks = vocab.select("toks").as[String].collect().toSeq
-    assert(toks === Seq(" aaa "))
+    assert(toks.values.toSeq === Seq(" aaa "))
+  }
+
+  test("freq ties break in UTF-8 byte order, not UTF-16 order") {
+    // (U+FFFD, x) and (U+1D11E, x) tie at freq 1. UTF-8 (EF BF BD vs
+    // F0 9D 84 9E) and Spark/DuckDB put U+FFFD first; UTF-16 (FFFD vs
+    // D834 DD1E) would put U+1D11E first.
+    val docs = Seq("\uFFFDx \uD834\uDD1Ex").toDF("text")
+    val merges = Bpe.trainMerges(docs, "text", rounds = 1)
+      .as[(Int, String, String, Long)].collect().toSeq
+    assert(merges === Seq((1, "\uFFFD", "x", 1L)))
   }
 
   test("token counts shrink as merges apply; single-char words survive") {
@@ -41,9 +49,9 @@ class BpeSpec extends SparkSpec {
     // "ab" fully merges in round 1; rounds 2-4 learn nothing. The
     // vocab and token counts must survive the empty rounds.
     val docs = Seq((1L, "ab ab")).toDF("doc_id", "text")
-    val (merges, vocab) = Bpe.train(docs.select("text"), "text", rounds = 4)
-    assert(merges.count() === 1L) // only round 1 learned a merge
-    assert(vocab.select("toks").as[String].collect().toSeq === Seq(" ab "))
+    val (merges, toks) = Bpe.train(docs.select("text"), "text", rounds = 4)
+    assert(merges.size === 1) // only round 1 learned a merge
+    assert(toks.values.toSeq === Seq(" ab "))
     val counts = Bpe.tokenCounts(docs, "doc_id", "text", rounds = 4)
       .as[(Long, Long, Long)].collect().toSeq
     assert(counts === Seq((1L, 2L, 2L))) // 2 words, 1 token each

@@ -207,14 +207,17 @@ class PropertySpec extends SparkSpec {
   /** Straight-line reference BPE: word histogram, then per round count
     * adjacent pairs (overlaps counted), argmax by (freq desc, pair
     * asc), merge via the scan-and-skip replace — the semantics
-    * Bpe.scala promises.
+    * Bpe.scala promises. Symbols start as codepoints and compare as
+    * codepoint sequences (UTF-8 byte order, Spark's and DuckDB's
+    * string order; UTF-16 `String` order differs past the BMP).
     */
   private def referenceBpe(
       docs: Seq[String], rounds: Int): Seq[(Int, String, String, Long)] = {
     var hist: Map[Vector[String], Long] = docs
       .flatMap(_.split(" ").filter(_.nonEmpty))
       .groupBy(identity).map { case (w, ws) =>
-        w.map(_.toString).toVector -> ws.size.toLong
+        w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
+          .toVector -> ws.size.toLong
       }
     (1 to rounds).flatMap { r =>
       val freq = scala.collection.mutable.Map.empty[(String, String), Long]
@@ -222,7 +225,9 @@ class PropertySpec extends SparkSpec {
         freq(syms(i) -> syms(i + 1)) = freq.getOrElse(syms(i) -> syms(i + 1), 0L) + cnt
       if (freq.isEmpty) Seq.empty
       else {
-        val ((p1, p2), f) = freq.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
+        import scala.math.Ordering.Implicits.seqOrdering
+        def cps(x: String): Seq[Int] = x.codePoints().toArray.toSeq
+        val ((p1, p2), f) = freq.toSeq.minBy { case ((a, b), c) => (-c, cps(a), cps(b)) }
         hist = hist.map { case (syms, cnt) =>
           val out = Vector.newBuilder[String]
           var i = 0
@@ -276,7 +281,8 @@ class PropertySpec extends SparkSpec {
   test("BPE merge table matches the sequential reference on random corpora") {
     import spark.implicits._
     val word: Gen[String] =
-      Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf('a', 'b', 'c')).map(_.mkString))
+      Gen.choose(1, 6).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf("a", "b", "c", "é", "\uD834\uDD1E", "\uFFFD")).map(_.mkString))
     val doc: Gen[String] = Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, word).map(_.mkString(" ")))
     val corpus: Gen[List[String]] = Gen.choose(3, 15).flatMap(n => Gen.listOfN(n, doc))
     forAllSampled(corpus, n = 12) { docs =>
@@ -468,31 +474,17 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("CharSpaced == HOF twin and a codepoint reference on fuzzed unicode") {
-    import graft.functions.CharSpaced
+  test("Bpe.seed == a codepoint reference on fuzzed unicode") {
     // codepoint-level reference: one space before every UTF-32 char
     // plus a trailing space — the unit substring(w, i, 1) counts
     def ref(s: String): String =
-      if (s.isEmpty) "   "
-      else s.codePoints().toArray
+      s.codePoints().toArray
         .map(cp => " " + new String(Character.toChars(cp))).mkString + " "
     forAllSampled(spaceyText, 300) { s =>
       // words never contain the split separator; drop plain spaces but
       // keep tabs/newlines (split(" ") leaves them inside words)
       val w = s.replace(" ", "")
-      assert(CharSpaced.spaced(UTF8String.fromString(w)).toString === ref(w),
-        s"on '$w'")
-    }
-    // twin equality through the engine, multibyte + control chars
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val words = Seq("key", "héllo", "✓", "𝄞x𝄞", "a\tb", "", "ß")
-    val got = words.toDF("w")
-      .select(CharSpaced.char_spaced(col("w")).as("k"),
-        CharSpaced.charSpacedTwin("w").as("t"))
-      .collect()
-    got.zip(words).foreach { case (r, w) =>
-      assert(r.getString(0) === r.getString(1), s"kernel != twin on '$w'")
+      assert(graft.operators.Bpe.seed(w) === ref(w), s"on '$w'")
     }
   }
 
